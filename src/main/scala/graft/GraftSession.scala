@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 import graft.plans.GraftExtensions
 
-/** Recommended session bootstrap for library consumers.
+/** The engine's only session factory: library consumers, the perf
+  * benchmark and every harness (Bench, Verify, Prof, Explain, the test
+  * session) build from [[builder]], so the engine under test is the engine
+  * that ships and the one that is benchmarked.
   *
   * Encodes the configuration this engine is designed against: AQE on
   * (runtime re-planning, skew-join splitting, partition coalescing),
@@ -14,6 +17,11 @@ import graft.plans.GraftExtensions
   * `master`/`defaultParallelism` change; every operator in this library is
   * partitioning-aware by construction, so the same code runs unmodified
   * from `local[4]` to 1000 executors.
+  *
+  * The harnesses start through [[local]] and override only:
+  *  - the test session: a temporary `spark.sql.warehouse.dir`;
+  *  - Bench: `spark.sql.adaptive.enabled` (its `SPARK_GRAFT_AQE=0` switch);
+  *  - Explain: log level ERROR, set on the running session.
   */
 object GraftSession {
 
@@ -47,9 +55,15 @@ object GraftSession {
       bb.config("spark.sql.shuffle.partitions", n.toString))
   }
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** A `local[cores]` session with one shuffle partition per core, the UI
+    * off, log level WARN, and `conf` applied over [[builder]]'s settings.
+    */
+  def local(
+      cores: Int = Runtime.getRuntime.availableProcessors(),
+      conf: Map[String, String] = Map.empty): SparkSession = {
     val s = builder(s"local[$cores]", defaultParallelism = Some(cores))
       .config("spark.ui.enabled", "false")
+      .config(conf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StringType
 
+import graft.QueryDef
 import graft.engine.Enrich.{ColumnClassifier, LanguageDetector}
 import graft.engine.SchemaMap.{ColumnMapping, SchemaMapper}
 import graft.sources.{Loader, WorkbookSink}
@@ -408,26 +409,19 @@ object Pipelines {
       .orderBy("metric")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipe4_report_card" -> reportCard,
-    "pipe1_training_corpus" -> trainingCorpus,
-    "pipe2_ingest_batch" -> ingestBatch,
-    "pipe3_packed_corpus" -> packedCorpus
-  )
-
   /** pipe1's oracle chains the SAME shared fragments the stage oracles
     * use — Preprocess.Placeholders, TextAnalysis.sqlQuality/sqlLangId,
     * Dedup.dd3CtesFrom/dd3PairSelect and dd5's recursive closure — so the
     * composed pipeline cannot drift from its stages.
     */
-  val oracle: Map[String, String] = {
+  val registry: Seq[QueryDef] = {
     import graft.operators.{Dedup, TextAnalysis}
     val ph = Preprocess.Placeholders.map("'" + _ + "'").mkString("(", ",", ")")
     val q = TextAnalysis.sqlQuality("text")
     val lang = TextAnalysis.sqlLangId("text")
     val fp = TextAnalysis.sqlFp("text")
-    Map(
-      "pipe4_report_card" ->
+    Seq(
+      QueryDef("pipe4_report_card", reportCard,
         s"""WITH d AS (
            |  SELECT CAST(count(*) AS DOUBLE) AS n_docs,
            |    round(avg(length(text)), 6) AS mean_chars,
@@ -455,8 +449,8 @@ object Pipelines {
            |  UNION ALL SELECT 'mean_chars', mean_chars FROM d
            |  UNION ALL SELECT 'n_docs', n_docs FROM d
            |  UNION ALL SELECT 'n_tokens', n_tokens FROM tk)
-           |SELECT metric, value FROM m ORDER BY metric""".stripMargin,
-      "pipe2_ingest_batch" ->
+           |SELECT metric, value FROM m ORDER BY metric""".stripMargin),
+      QueryDef("pipe2_ingest_batch", ingestBatch,
         s"""WITH scored AS (
            |  SELECT doc_id, $q AS quality, $lang AS lang_detected, $fp AS fp
            |  FROM documents
@@ -466,8 +460,8 @@ object Pipelines {
            |    row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rk
            |  FROM scored)
            |WHERE rk = 1
-           |ORDER BY doc_id""".stripMargin,
-      "pipe1_training_corpus" ->
+           |ORDER BY doc_id""".stripMargin),
+      QueryDef("pipe1_training_corpus", trainingCorpus,
         (s"WITH RECURSIVE ${keptCtes(ph, q, lang)}\n" +
           """SELECT doc_id, lang_detected, quality FROM (
             |  SELECT doc_id, lang_detected, quality,
@@ -475,8 +469,8 @@ object Pipelines {
             |      ORDER BY md5(doc_id::VARCHAR), doc_id) AS rn
             |  FROM kept)
             |WHERE rn <= 5
-            |ORDER BY lang_detected, doc_id""".stripMargin),
-      "pipe3_packed_corpus" ->
+            |ORDER BY lang_detected, doc_id""".stripMargin)),
+      QueryDef("pipe3_packed_corpus", packedCorpus,
         (s"WITH RECURSIVE ${keptCtes(ph, q, lang)},\n" +
           s""" tk AS (
              |  SELECT doc_id, ${TextAnalysis.sqlTokenCount("text")} AS n,
@@ -484,6 +478,7 @@ object Pipelines {
              |  FROM kept),
              |""".stripMargin +
           TextAnalysis.sqlPackTail("tk")))
+    )
   }
 
   /** The shared oracle CTE chain through `kept` — the SQL twin of

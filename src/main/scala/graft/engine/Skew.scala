@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.t
 
 /** Skew mitigation utilities (SURVEY.md §2.5 / north-star scale notes).
@@ -81,18 +82,13 @@ object Skew {
       .orderBy("c_mktsegment")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "skew1_salted_sum" -> saltedSumQuery,
-    "skew2_salted_join" -> saltedJoinQuery
-  )
-
-  val oracle: Map[String, String] = Map(
-    "skew1_salted_sum" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("skew1_salted_sum", saltedSumQuery,
       """SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "skew2_salted_join" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("skew2_salted_join", saltedJoinQuery,
       """SELECT c_mktsegment, round(sum(o_totalprice), 2) AS total_price
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin
+        |GROUP BY 1 ORDER BY 1""".stripMargin)
   )
 }

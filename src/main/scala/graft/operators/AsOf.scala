@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.t
 
 /** As-of join over the event stream (SURVEY.md §2.5 "range/as-of joins for
@@ -63,13 +64,8 @@ object AsOf {
       .orderBy("purchase_id", "click_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev4_asof_join" -> purchaseAfterClick,
-    "ev5_interval_join" -> intervalJoin
-  )
-
-  val oracle: Map[String, String] = Map(
-    "ev4_asof_join" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("ev4_asof_join", purchaseAfterClick,
       """WITH e AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, event_type
         |  FROM events WHERE event_type IN ('click', 'purchase')),
@@ -86,8 +82,8 @@ object AsOf {
         |  click_id, click_ts_ms, epoch_ms(ts) - click_ts_ms AS gap_ms
         |FROM carried
         |WHERE event_type = 'purchase'
-        |ORDER BY purchase_id""".stripMargin,
-    "ev5_interval_join" ->
+        |ORDER BY purchase_id""".stripMargin),
+    QueryDef("ev5_interval_join", intervalJoin,
       """WITH e AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, event_type
         |  FROM events WHERE event_type IN ('click', 'purchase'))
@@ -98,6 +94,6 @@ object AsOf {
         |  ON p.event_type = 'purchase' AND c.event_type = 'click'
         | AND p.user_id = c.user_id
         | AND c.ts >= p.ts - INTERVAL 10 MINUTE AND c.ts < p.ts
-        |ORDER BY purchase_id, click_id""".stripMargin
+        |ORDER BY purchase_id, click_id""".stripMargin)
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.t
 import graft.engine.Preprocess
 
@@ -122,25 +123,18 @@ object Cleaning {
       .orderBy("r_name")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p_clean_documents" -> cleanDocuments,
-    "p_clean_messy" -> cleanMessy,
-    "p_clean_csv" -> cleanCsv,
-    "wb1_workbook_roundtrip" -> workbookRoundtrip
-  )
-
   private val ph = "('n/a','none','-','null','')"
 
-  val oracle: Map[String, String] = Map(
-    "p_clean_documents" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("p_clean_documents", cleanDocuments,
       s"""SELECT DISTINCT doc_id,
          |  trim(CASE WHEN text IN $ph THEN NULL ELSE text END) AS text,
          |  trim(CASE WHEN lang IN $ph THEN NULL ELSE lang END) AS lang,
          |  trim(CASE WHEN source IN $ph THEN NULL ELSE source END) AS source,
          |  n_chars
          |FROM documents
-         |ORDER BY doc_id""".stripMargin,
-    "p_clean_messy" ->
+         |ORDER BY doc_id""".stripMargin),
+    QueryDef("p_clean_messy", cleanMessy,
       """SELECT DISTINCT
         |  trim(o_orderpriority) AS priority_level,
         |  CASE WHEN o_orderkey % 100 = 0 THEN NULL
@@ -149,8 +143,8 @@ object Cleaning {
         |  o_totalprice AS total
         |FROM orders
         |ORDER BY orderkey ASC NULLS FIRST, order_date ASC NULLS FIRST,
-        |  priority_level, total""".stripMargin,
-    "p_clean_csv" ->
+        |  priority_level, total""".stripMargin),
+    QueryDef("p_clean_csv", cleanCsv,
       s"""WITH src AS (
          |  SELECT * FROM read_csv('$CsvFixturePath', header=true, all_varchar=true)),
          | c AS (
@@ -164,10 +158,10 @@ object Cleaning {
          |  epoch_ms(try_cast(s AS TIMESTAMP)) AS ship_date_ms, nt AS note
          |FROM c
          |ORDER BY order_id_ ASC NULLS FIRST, amount ASC NULLS FIRST,
-         |  ship_date_ms ASC NULLS FIRST, note ASC NULLS FIRST""".stripMargin,
-    "wb1_workbook_roundtrip" ->
+         |  ship_date_ms ASC NULLS FIRST, note ASC NULLS FIRST""".stripMargin),
+    QueryDef("wb1_workbook_roundtrip", workbookRoundtrip,
       """SELECT r_name, count(*) AS n_nations
         |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1 ORDER BY r_name""".stripMargin
+        |GROUP BY 1 ORDER BY r_name""".stripMargin)
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.{t, tWide}
 import graft.functions.TextFunctions.{fingerprint, tokenSet}
 
@@ -1179,21 +1180,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dd12_bag_fingerprint" -> bagFingerprint,
-    "dd11_quality_canonical" -> qualityCanonical,
-    "dd1_exact_dedup" -> exactDedup,
-    "dd2_jaccard_pairs" -> jaccardPairs,
-    "dd3_minhash_lsh" -> minhashLsh,
-    "dd4_simhash" -> simhash,
-    "dd5_dedup_clusters" -> dedupClusters,
-    "dd6_contamination" -> contamination,
-    "dd7_near_contamination" -> nearContamination,
-    "dd8_span_contamination" -> spanContamination,
-    "dd9_incremental" -> incrementalDedup,
-    "dd10_edit_distance" -> editDistancePairs
-  )
-
   // Single-line on purpose: this fragment is interpolated into a larger
   // string whose .stripMargin would otherwise eat the first '|' of any
   // line-leading '||' concat operator.
@@ -1307,8 +1293,8 @@ object Dedup {
       |    (len(sa.shingles) + len(sb.shingles)
       |     - len(list_intersect(sa.shingles, sb.shingles))), 4) >= 0.7""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "dd12_bag_fingerprint" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("dd12_bag_fingerprint", bagFingerprint,
       s"""WITH f AS (
          |  SELECT doc_id,
          |    ${TextAnalysis.sqlFp("text")} AS fp,
@@ -1329,10 +1315,10 @@ object Dedup {
          |  n_members > 1 AND doc_id <> bag_canonical_id
          |    AND fp <> canon_fp AS is_reorder_dup
          |FROM wdw
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // dd11: dd5's recursive component chain verbatim, then the quality
     // argmax (t4's shared score template) per component.
-    "dd11_quality_canonical" ->
+    QueryDef("dd11_quality_canonical", qualityCanonical,
       (s"WITH RECURSIVE $dd3Ctes,\n" +
         s" pairs AS ($dd3PairSelect),\n" +
         s""" edges AS (
@@ -1358,11 +1344,11 @@ object Dedup {
           |  FROM canon c JOIN q USING (doc_id))
           |SELECT doc_id, canonical_doc_id, quality, rk = 1 AS keep
           |FROM rk
-          |ORDER BY doc_id""".stripMargin),
+          |ORDER BY doc_id""".stripMargin)),
     // dd8: identical window construction (1-based k-token slices joined
     // with ' ', md5'd, per-doc distinct) and the shared cap template with
     // a constant band column.
-    "dd8_span_contamination" ->
+    QueryDef("dd8_span_contamination", spanContamination,
       (s"""WITH tk AS (
           |  SELECT doc_id, $sqlToks AS t FROM documents),
           | wins AS (
@@ -1383,10 +1369,10 @@ object Dedup {
           |  ON e.wh = tr.wh AND e.doc_id < 1000000 AND tr.doc_id >= 1000000
           |GROUP BY 1, 2
           |HAVING count(*) >= $SpanHits
-          |ORDER BY eval_doc_id, train_doc_id""".stripMargin),
+          |ORDER BY eval_doc_id, train_doc_id""".stripMargin)),
     // Concatenated, not s-interpolated: the fingerprint regex '\s+' must
     // not pass through escape processing.
-    "dd6_contamination" ->
+    QueryDef("dd6_contamination", contamination,
       ("""WITH fps AS (
         |  SELECT doc_id,
         |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
@@ -1397,16 +1383,16 @@ object Dedup {
         | tr AS (SELECT doc_id + 1000000 AS train_doc_id, fp FROM fps)
         |SELECT eval_doc_id, train_doc_id
         |FROM tr JOIN ev USING (fp)
-        |ORDER BY eval_doc_id, train_doc_id""".stripMargin),
-    "dd4_simhash" -> dd4Oracle,
-    "dd1_exact_dedup" ->
+        |ORDER BY eval_doc_id, train_doc_id""".stripMargin)),
+    QueryDef("dd4_simhash", simhash, dd4Oracle),
+    QueryDef("dd1_exact_dedup", exactDedup,
       """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
         |  min(doc_id) AS canonical_doc_id, count(*) AS n_copies
         |FROM (SELECT doc_id, text FROM documents
         |      UNION ALL SELECT doc_id + 1000000, text FROM documents)
         |GROUP BY 1
-        |ORDER BY canonical_doc_id""".stripMargin,
-    "dd2_jaccard_pairs" ->
+        |ORDER BY canonical_doc_id""".stripMargin),
+    QueryDef("dd2_jaccard_pairs", jaccardPairs,
       s"""WITH $unigramCandCtes,
         | p AS (
         |  SELECT doc_id, list_distinct(list_transform(tks,
@@ -1418,11 +1404,11 @@ object Dedup {
         |FROM cand JOIN p a ON doc_a = a.doc_id JOIN p b ON doc_b = b.doc_id
         |WHERE round(CAST(len(list_intersect(a.ts, b.ts)) AS DOUBLE) /
         |    (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))), 4) >= 0.6
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // dd10: the SHARED candidate CTEs with the verifier swapped to
     // normalized Levenshtein; no length guard here — it is a Spark-side
     // cost prefilter that provably drops no kept pair.
-    "dd10_edit_distance" ->
+    QueryDef("dd10_edit_distance", editDistancePairs,
       s"""WITH $unigramCandCtes
         |SELECT doc_a, doc_b,
         |  round(1.0 - CAST(levenshtein(a.text, b.text) AS DOUBLE) /
@@ -1431,13 +1417,13 @@ object Dedup {
         |  JOIN documents b ON doc_b = b.doc_id
         |WHERE round(1.0 - CAST(levenshtein(a.text, b.text) AS DOUBLE) /
         |    greatest(length(a.text), length(b.text)), 4) >= 0.8
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "dd3_minhash_lsh" ->
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    QueryDef("dd3_minhash_lsh", minhashLsh,
       (s"WITH $dd3Ctes\n" +
-        s"$dd3PairSelect\nORDER BY doc_a, doc_b"),
+        s"$dd3PairSelect\nORDER BY doc_a, doc_b")),
     // dd7: the dd3 pipeline over the combined train/eval corpus with the
     // candidate predicate restricted to cross-corpus pairs.
-    "dd7_near_contamination" ->
+    QueryDef("dd7_near_contamination", nearContamination,
       (s"""WITH corpus AS (
           |  SELECT doc_id, text FROM documents
           |  WHERE ${sqlIsEvalSplit("doc_id")}
@@ -1449,12 +1435,12 @@ object Dedup {
         s",\n pairs AS ($dd3PairSelect)\n" +
         """SELECT doc_a AS eval_doc_id, doc_b AS train_doc_id, shingle_jaccard
           |FROM pairs
-          |ORDER BY eval_doc_id, train_doc_id""".stripMargin),
+          |ORDER BY eval_doc_id, train_doc_id""".stripMargin)),
     // dd9: the dd3 CTE chain over the batch∪index corpus (batch = the
     // md5-carved quarter; index = the shifted remainder + planted verbatim
     // copies of half the batch), aggregated to one verdict row per batch
     // doc. The exact layer shares dd6's fingerprint expression.
-    "dd9_incremental" ->
+    QueryDef("dd9_incremental", incrementalDedup,
       (s"""WITH corpus AS (
           |  SELECT doc_id, text FROM documents
           |  WHERE ${sqlIsEvalSplit("doc_id")}
@@ -1485,11 +1471,11 @@ object Dedup {
           |FROM (SELECT doc_id FROM corpus WHERE doc_id < 1000000) b
           |LEFT JOIN exhit e ON b.doc_id = e.doc_id
           |LEFT JOIN near n ON b.doc_id = n.doc_id
-          |ORDER BY b.doc_id""".stripMargin),
+          |ORDER BY b.doc_id""".stripMargin)),
     // Canonical assignment: min doc_id over each connected component of the
     // dd3 edge set, computed as a recursive transitive closure (tractable
     // at oracle scale; the Spark side uses log-round label propagation).
-    "dd5_dedup_clusters" ->
+    QueryDef("dd5_dedup_clusters", dedupClusters,
       (s"WITH RECURSIVE $dd3Ctes,\n" +
         s" pairs AS ($dd3PairSelect),\n" +
         """ edges AS (
@@ -1503,6 +1489,6 @@ object Dedup {
           |  CAST(least(coalesce(min(r.dst), d.doc_id), d.doc_id) AS BIGINT) AS canonical_doc_id
           |FROM documents d LEFT JOIN reach r ON d.doc_id = r.src
           |GROUP BY d.doc_id
-          |ORDER BY doc_id""".stripMargin)
+          |ORDER BY doc_id""".stripMargin))
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.QueryDef
 import graft.Tables.t
 import graft.engine.{Dictionary, Enrich}
 import graft.engine.DictionaryTranslator
@@ -839,32 +840,6 @@ object Enrichment {
       .orderBy("source")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d15_unimax" -> unimaxAllocation,
-    "fe2_target_encoding" -> targetEncoding,
-    "d14_dsir_weights" -> dsirWeights,
-    "fe1_hashed_features" -> hashedFeatures,
-    "d11_leakproof_split" -> leakproofSplit,
-    "d13_curriculum" -> curriculum,
-    "d5_mixture_weights" -> mixtureWeights,
-    "d8_quality_prune" -> qualityPrune,
-    "d10_winsorize" -> winsorize,
-    "d9_token_budget" -> tokenBudget,
-    "d7_weighted_sample" -> weightedSample,
-    "d12_epoch_mix" -> epochMix,
-    "d6_temperature_weights" -> temperatureWeights,
-    "d4_stratified_sample" -> stratifiedSample,
-    "e2_detect_distributed" -> detectLanguageDistributed,
-    "e3_translate_dictionary" -> translateDictionaryQuery,
-    "d1_distinct_dictionary" -> distinctDictionary,
-    "d2_value_sample" -> valueSample,
-    "d3_hashed_sample" -> hashedSample,
-    "e5_translate_flags" -> translateFlags,
-    "e5_translate_flags_join" -> translateFlagsJoin,
-    "e1_classify_columns" -> classifyColumns,
-    "e8_vertical_partition" -> verticalPartition
-  )
-
   private val e2Oracle: String = {
     val d = Enrich.HeuristicLanguageDetector
     def lst(s: Iterable[String]) = s.toSeq.sorted.map("'" + _ + "'").mkString(",")
@@ -902,8 +877,8 @@ object Enrichment {
       |  SELECT DISTINCT 'source', trim(source) FROM documents
       |  WHERE source IS NOT NULL""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "d15_unimax" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("d15_unimax", unimaxAllocation,
       s"""WITH dom AS (
          |  SELECT source,
          |    CAST(sum(${TextAnalysis.sqlTokenCount("text")}) AS BIGINT)
@@ -935,8 +910,8 @@ object Enrichment {
          |    ELSE (b - pk)::DOUBLE / ((d - k) * n_tokens) END, 6)
          |    AS epochs
          |FROM g CROSS JOIN kf
-         |ORDER BY source""".stripMargin,
-    "fe2_target_encoding" ->
+         |ORDER BY source""".stripMargin),
+    QueryDef("fe2_target_encoding", targetEncoding,
       """WITH seg AS (
         |  SELECT c_mktsegment, sum(c_acctbal) AS s, count(*) AS n
         |  FROM customer GROUP BY c_mktsegment),
@@ -948,8 +923,8 @@ object Enrichment {
         |FROM customer c
         |JOIN seg ON c.c_mktsegment = seg.c_mktsegment
         |CROSS JOIN overall
-        |ORDER BY c_custkey""".stripMargin,
-    "d14_dsir_weights" ->
+        |ORDER BY c_custkey""".stripMargin),
+    QueryDef("d14_dsir_weights", dsirWeights,
       s"""WITH occ AS (
          |  SELECT doc_id, is_t,
          |    ('0x' || substr(md5(tok), 1, 8))::BIGINT % 256 AS b
@@ -977,8 +952,8 @@ object Enrichment {
          |SELECT d.doc_id, coalesce(p.n_tokens, 0) AS n_tokens,
          |  p.dsir_logratio
          |FROM documents d LEFT JOIN per p USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-    "fe1_hashed_features" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    QueryDef("fe1_hashed_features", hashedFeatures,
       """WITH cust AS (
         |  SELECT c_custkey,
         |    ('0x' || substr(md5(c_mktsegment), 1, 8))::BIGINT % 16
@@ -998,8 +973,8 @@ object Enrichment {
         |    CASE WHEN mx = mn THEN 0.5
         |      ELSE round(CAST(cents - mn AS DOUBLE) / (mx - mn), 6) END
         |  FROM cust, b)
-        |ORDER BY c_custkey, feature_id""".stripMargin,
-    "d13_curriculum" ->
+        |ORDER BY c_custkey, feature_id""".stripMargin),
+    QueryDef("d13_curriculum", curriculum,
       s"""WITH occ AS (
          |  SELECT doc_id, unnest(${TextAnalysis.sqlTokens}) AS w
          |  FROM documents),
@@ -1021,8 +996,8 @@ object Enrichment {
          |    WHEN s.difficulty > (SELECT hi FROM cuts) THEN 'hard'
          |    ELSE 'medium' END AS phase
          |FROM documents d LEFT JOIN scored s USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-    "d11_leakproof_split" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    QueryDef("d11_leakproof_split", leakproofSplit,
       s"""WITH f AS (
          |  SELECT doc_id, source,
          |    ${TextAnalysis.sqlFp("text")} AS fp,
@@ -1037,8 +1012,8 @@ object Enrichment {
          |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens
          |FROM s
          |GROUP BY split, source
-         |ORDER BY split, source""".stripMargin,
-    "d12_epoch_mix" ->
+         |ORDER BY split, source""".stripMargin),
+    QueryDef("d12_epoch_mix", epochMix,
       """WITH c AS (
         |  SELECT source, count(*) AS n_d FROM documents GROUP BY source),
         | tot AS (SELECT count(*) AS n FROM documents),
@@ -1056,8 +1031,8 @@ object Enrichment {
         |  FROM documents d JOIN f ON d.source = f.source)
         |SELECT doc_id, source, CAST(u.copy AS BIGINT) AS copy
         |FROM p CROSS JOIN unnest(generate_series(1, n_copies)) AS u(copy)
-        |ORDER BY doc_id, copy""".stripMargin,
-    "d7_weighted_sample" ->
+        |ORDER BY doc_id, copy""".stripMargin),
+    QueryDef("d7_weighted_sample", weightedSample,
       s"""WITH tk AS (
          |  SELECT doc_id,
          |    ${TextAnalysis.sqlTokenCount("text")} AS n_tokens
@@ -1070,29 +1045,29 @@ object Enrichment {
          |SELECT doc_id, n_tokens, es_key
          |FROM keyed
          |ORDER BY es_key, doc_id
-         |LIMIT 20""".stripMargin,
-    "d5_mixture_weights" ->
+         |LIMIT 20""".stripMargin),
+    QueryDef("d5_mixture_weights", mixtureWeights,
       """WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source)
         |SELECT source, n_docs,
         |  round(n_docs::DOUBLE / sum(n_docs) OVER (), 6) AS share,
         |  round((1.0 / count(*) OVER ()) / (n_docs::DOUBLE / sum(n_docs) OVER ()), 6) AS weight
         |FROM c
-        |ORDER BY source NULLS FIRST""".stripMargin,
-    "d6_temperature_weights" ->
+        |ORDER BY source NULLS FIRST""".stripMargin),
+    QueryDef("d6_temperature_weights", temperatureWeights,
       """WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source)
         |SELECT source, n_docs,
         |  round(sqrt(sum(n_docs) OVER ()::DOUBLE / n_docs), 6) AS temp_weight
         |FROM c
-        |ORDER BY source NULLS FIRST""".stripMargin,
-    "d4_stratified_sample" ->
+        |ORDER BY source NULLS FIRST""".stripMargin),
+    QueryDef("d4_stratified_sample", stratifiedSample,
       """SELECT lang, doc_id FROM (
         |  SELECT lang, doc_id,
         |    row_number() OVER (PARTITION BY lang
         |      ORDER BY md5(doc_id::VARCHAR), doc_id) AS rn
         |  FROM documents)
         |WHERE rn <= 5
-        |ORDER BY lang, doc_id""".stripMargin,
-    "d10_winsorize" ->
+        |ORDER BY lang, doc_id""".stripMargin),
+    QueryDef("d10_winsorize", winsorize,
       """WITH cuts AS (
         |  SELECT round(quantile_cont(l_extendedprice, 0.01), 4) AS lo_cut,
         |         round(quantile_cont(l_extendedprice, 0.99), 4) AS hi_cut
@@ -1105,8 +1080,8 @@ object Enrichment {
         |             WHEN l_extendedprice > hi_cut THEN hi_cut
         |             ELSE l_extendedprice END), 6) AS mean_winsorized
         |FROM lineitem, cuts
-        |GROUP BY lo_cut, hi_cut""".stripMargin,
-    "d8_quality_prune" ->
+        |GROUP BY lo_cut, hi_cut""".stripMargin),
+    QueryDef("d8_quality_prune", qualityPrune,
       s"""WITH s AS (
          |  SELECT source, doc_id, ${TextAnalysis.sqlQuality("text")} AS quality
          |  FROM documents),
@@ -1118,8 +1093,8 @@ object Enrichment {
          |  FROM s)
          |SELECT source, doc_id, quality, rk
          |FROM r WHERE rk <= (n_docs + 1) // 2
-         |ORDER BY source, rk""".stripMargin,
-    "d9_token_budget" ->
+         |ORDER BY source, rk""".stripMargin),
+    QueryDef("d9_token_budget", tokenBudget,
       s"""WITH tk AS (
          |  SELECT source, doc_id, ${TextAnalysis.sqlTokenCount("text")} AS n_tokens
          |  FROM documents),
@@ -1132,13 +1107,13 @@ object Enrichment {
          |  FROM tk WHERE n_tokens > 0)
          |SELECT source, doc_id, n_tokens, tokens_before
          |FROM p WHERE tokens_before < 500
-         |ORDER BY source, tokens_before, doc_id""".stripMargin,
-    "e2_detect_distributed" -> e2Oracle,
-    "d1_distinct_dictionary" ->
+         |ORDER BY source, tokens_before, doc_id""".stripMargin),
+    QueryDef("e2_detect_distributed", detectLanguageDistributed, e2Oracle),
+    QueryDef("d1_distinct_dictionary", distinctDictionary,
       s"""SELECT column_name, value FROM (
          |  $sqlDistinctDict)
-         |ORDER BY column_name, value""".stripMargin,
-    "d2_value_sample" ->
+         |ORDER BY column_name, value""".stripMargin),
+    QueryDef("d2_value_sample", valueSample,
       """SELECT * FROM (
         |  (SELECT 'lang' AS column_name, value FROM (
         |     SELECT DISTINCT trim(lang) AS value FROM documents
@@ -1147,23 +1122,25 @@ object Enrichment {
         |  (SELECT 'event_type', value FROM (
         |     SELECT DISTINCT trim(event_type) AS value FROM events
         |     WHERE event_type IS NOT NULL) ORDER BY value LIMIT 3))
-        |ORDER BY column_name, value""".stripMargin,
-    "e3_translate_dictionary" ->
+        |ORDER BY column_name, value""".stripMargin),
+    QueryDef("e3_translate_dictionary", translateDictionaryQuery,
       s"""WITH d AS (
          |  $sqlDistinctDict),
          | m(orig, trans) AS (SELECT * FROM (VALUES
          |  ('en','English'), ('de','German'), ('es','Spanish'), ('fr','French')))
          |SELECT column_name, value, coalesce(trans, value) AS translated
          |FROM d LEFT JOIN m ON value = orig AND column_name = 'lang'
-         |ORDER BY column_name, value""".stripMargin,
-    "d3_hashed_sample" ->
+         |ORDER BY column_name, value""".stripMargin),
+    QueryDef("d3_hashed_sample", hashedSample,
       """SELECT value FROM (
         |  SELECT DISTINCT trim(p_name) AS value FROM part
         |  WHERE p_name IS NOT NULL)
-        |ORDER BY md5(value), value LIMIT 20""".stripMargin,
-    "e5_translate_flags" -> translateFlagsOracle,
-    "e5_translate_flags_join" -> translateFlagsOracle,
-    "e1_classify_columns" -> classifyOracle,
-    "e8_vertical_partition" -> verticalPartitionOracle
+        |ORDER BY md5(value), value LIMIT 20""".stripMargin),
+    QueryDef("e5_translate_flags", translateFlags, translateFlagsOracle),
+    QueryDef("e5_translate_flags_join", translateFlagsJoin,
+      translateFlagsOracle),
+    QueryDef("e1_classify_columns", classifyColumns, classifyOracle),
+    QueryDef("e8_vertical_partition", verticalPartition,
+      verticalPartitionOracle)
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.{t, r2, r2s, r6, r6s}
 
 /** Windowed aggregation over the `events` stream table, batch mode
@@ -823,34 +824,8 @@ object Events {
       .orderBy("user_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev26_bot_score" -> botScore,
-    "ev25_vwap" -> vwap,
-    "ev24_twap" -> twap,
-    "ev22_churn" -> churn,
-    "ev23_ewma" -> ewmaDaily,
-    "ev21_streaks" -> streaks,
-    "ev20_attribution" -> attribution,
-    "ev19_conversion_lag" -> conversionLag,
-    "ev13_rollup_merge" -> rollupMerge,
-    "ev15_rolling_active" -> rollingActive,
-    "ev8_merge_upsert" -> mergeUpsert,
-    "ev16_merge_full" -> mergeFull,
-    "ev9_retention" -> retention,
-    "ev10_anomaly" -> anomalies,
-    "ev11_resample" -> resample,
-    "ev12_scd2_history" -> scd2History,
-    "ev1_tumbling_window" -> tumbling,
-    "ev2_sliding_window" -> sliding,
-    "ev3_sessions" -> sessions,
-    "ev6_funnel" -> funnel,
-    "ev7_latest_state" -> latestState,
-    "ev17_transitions" -> transitions,
-    "ev18_session_paths" -> sessionPaths
-  )
-
-  val oracle: Map[String, String] = Map(
-    "ev22_churn" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("ev22_churn", churn,
       """WITH per AS (
         |  SELECT user_id, max(ts) AS last_ts, count(*) AS n_events
         |  FROM events GROUP BY 1),
@@ -862,8 +837,8 @@ object Events {
         |SELECT user_id, last_ts, n_events, days_inactive,
         |  days_inactive >= 1 AS churned
         |FROM d
-        |ORDER BY user_id""".stripMargin,
-    "ev23_ewma" ->
+        |ORDER BY user_id""".stripMargin),
+    QueryDef("ev23_ewma", ewmaDaily,
       """WITH daily AS (
         |  SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS day,
         |    event_type, round(sum(value), 2) AS x
@@ -884,8 +859,8 @@ object Events {
         |  round(x - lag(ewma) OVER (PARTITION BY event_type
         |    ORDER BY day), 2) + 0 AS dev_from_baseline
         |FROM sm
-        |ORDER BY event_type, day_ms""".stripMargin,
-    "ev21_streaks" ->
+        |ORDER BY event_type, day_ms""".stripMargin),
+    QueryDef("ev21_streaks", streaks,
       """WITH du AS (
         |  SELECT DISTINCT user_id, CAST(ts AS TIMESTAMP)::DATE AS day
         |  FROM events),
@@ -900,8 +875,8 @@ object Events {
         |SELECT user_id, max(len) AS longest_streak,
         |  count(*) AS n_streaks, CAST(sum(len) AS BIGINT) AS active_days
         |FROM isl GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-    "ev20_attribution" ->
+        |ORDER BY user_id""".stripMargin),
+    QueryDef("ev20_attribution", attribution,
       """WITH s AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
         |    event_type,
@@ -925,8 +900,8 @@ object Events {
         |  count(CASE WHEN m = 'f' THEN 1 END) AS first_touch_conversions,
         |  count(CASE WHEN m = 'l' THEN 1 END) AS last_touch_conversions
         |FROM m GROUP BY touch_type
-        |ORDER BY touch_type""".stripMargin,
-    "ev26_bot_score" ->
+        |ORDER BY touch_type""".stripMargin),
+    QueryDef("ev26_bot_score", botScore,
       """WITH e AS (
         |  SELECT user_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS ms
         |  FROM events),
@@ -952,8 +927,8 @@ object Events {
         |      END) < 0.95
         |  END AS suspected_bot
         |FROM p
-        |ORDER BY user_id""".stripMargin,
-    "ev25_vwap" ->
+        |ORDER BY user_id""".stripMargin),
+    QueryDef("ev25_vwap", vwap,
       """WITH e AS (
         |  SELECT event_type,
         |    epoch_ms(date_trunc('day', CAST(ts AS TIMESTAMP))) AS day_ms,
@@ -967,8 +942,8 @@ object Events {
         |  round(CAST(sum(cents * qty) AS DOUBLE)
         |    / (100.0 * nullif(CAST(sum(qty) AS BIGINT), 0)), 6) + 0 AS vwap
         |FROM e GROUP BY 1, 2
-        |ORDER BY event_type, day_ms""".stripMargin,
-    "ev24_twap" ->
+        |ORDER BY event_type, day_ms""".stripMargin),
+    QueryDef("ev24_twap", twap,
       """WITH e AS (
         |  SELECT user_id, event_id,
         |    epoch_ms(CAST(ts AS TIMESTAMP)) AS ms, value
@@ -984,8 +959,8 @@ object Events {
         |  round(avg(value), 6) + 0 AS mean_value,
         |  round(sum(value * dt) / nullif(sum(dt), 0), 6) + 0 AS twap
         |FROM s GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-    "ev19_conversion_lag" ->
+        |ORDER BY user_id""".stripMargin),
+    QueryDef("ev19_conversion_lag", conversionLag,
       """WITH e AS (
         |  SELECT user_id, event_type,
         |    epoch_ms(CAST(ts AS TIMESTAMP)) AS ms
@@ -1002,8 +977,8 @@ object Events {
         |  round(quantile_cont(lag_ms / 1000.0, 0.5), 4) AS median_s,
         |  round(quantile_cont(lag_ms / 1000.0, 0.9), 4) AS p90_s,
         |  round(sum(lag_ms) / (1000.0 * count(*)), 6) AS mean_s
-        |FROM lg""".stripMargin,
-    "ev17_transitions" ->
+        |FROM lg""".stripMargin),
+    QueryDef("ev17_transitions", transitions,
       """WITH s AS (
         |  SELECT event_type,
         |    lead(event_type) OVER (
@@ -1016,8 +991,8 @@ object Events {
         |SELECT from_type, to_type, n,
         |  round(n / sum(n) OVER (PARTITION BY from_type), 6) AS p
         |FROM tr
-        |ORDER BY from_type, to_type""".stripMargin,
-    "ev18_session_paths" ->
+        |ORDER BY from_type, to_type""".stripMargin),
+    QueryDef("ev18_session_paths", sessionPaths,
       """WITH e AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, event_type
         |  FROM events),
@@ -1044,8 +1019,8 @@ object Events {
         |  FROM rn WHERE rn <= 3 GROUP BY user_id, sess)
         |SELECT path, count(*) AS n_sessions
         |FROM paths GROUP BY path
-        |ORDER BY n_sessions DESC, path""".stripMargin,
-    "ev15_rolling_active" ->
+        |ORDER BY n_sessions DESC, path""".stripMargin),
+    QueryDef("ev15_rolling_active", rollingActive,
       """WITH du AS (
         |  SELECT DISTINCT date_trunc('day', CAST(ts AS TIMESTAMP)) AS day,
         |    user_id
@@ -1060,10 +1035,10 @@ object Events {
         |  GROUP BY wday)
         |SELECT epoch_ms(day) AS day_ms, dau, wau7
         |FROM dau JOIN wau ON day = wday
-        |ORDER BY day_ms""".stripMargin,
+        |ORDER BY day_ms""".stripMargin),
     // ev13's oracle aggregates the RAW events directly — a hash match
     // proves the Spark side's daily-partial merge is lossless.
-    "ev13_rollup_merge" ->
+    QueryDef("ev13_rollup_merge", rollupMerge,
       """SELECT epoch_ms(date_trunc('week', CAST(ts AS TIMESTAMP)))
         |    AS week_start_ms,
         |  event_type, count(*) AS n, round(sum(value), 2) AS total_value,
@@ -1071,8 +1046,8 @@ object Events {
         |  round(sum(value) / count(*), 6) AS avg_value
         |FROM events
         |GROUP BY 1, 2
-        |ORDER BY week_start_ms, event_type""".stripMargin,
-    "ev12_scd2_history" ->
+        |ORDER BY week_start_ms, event_type""".stripMargin),
+    QueryDef("ev12_scd2_history", scd2History,
       """WITH e AS (
         |  SELECT user_id, event_id,
         |    epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms, value
@@ -1088,14 +1063,14 @@ object Events {
         |  lead(ts_ms) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id)
         |    AS valid_to_ms
         |FROM f
-        |ORDER BY user_id, valid_from_ms, event_id""".stripMargin,
-    "ev1_tumbling_window" ->
+        |ORDER BY user_id, valid_from_ms, event_id""".stripMargin),
+    QueryDef("ev1_tumbling_window", tumbling,
       """SELECT epoch_ms(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS window_start_ms,
         |  event_type, count(*) AS n, round(sum(value), 2) AS total_value
         |FROM events
         |GROUP BY 1, 2
-        |ORDER BY window_start_ms, event_type""".stripMargin,
-    "ev2_sliding_window" ->
+        |ORDER BY window_start_ms, event_type""".stripMargin),
+    QueryDef("ev2_sliding_window", sliding,
       """WITH b AS (
         |  SELECT epoch_ms(CAST(ts AS TIMESTAMP)) - epoch_ms(CAST(ts AS TIMESTAMP)) % 1800000 AS t30, value
         |  FROM events),
@@ -1107,8 +1082,8 @@ object Events {
         |  round(sum(value), 2) AS total_value
         |FROM w
         |GROUP BY ws
-        |ORDER BY window_start_ms""".stripMargin,
-    "ev3_sessions" ->
+        |ORDER BY window_start_ms""".stripMargin),
+    QueryDef("ev3_sessions", sessions,
       """WITH us AS (
         |  -- truncate to microseconds first: Spark's ts is ns div 1000, and
         |  -- DuckDB's TIMESTAMP_NS->TIMESTAMP cast truncates identically,
@@ -1134,8 +1109,8 @@ object Events {
         |  count(*) AS n_events, round(sum(value), 2) AS total_value
         |FROM grp
         |GROUP BY user_id, sid
-        |ORDER BY user_id, session_start_ms""".stripMargin,
-    "ev6_funnel" ->
+        |ORDER BY user_id, session_start_ms""".stripMargin),
+    QueryDef("ev6_funnel", funnel,
       """WITH e AS (
         |  -- microsecond truncation first, same convention as ev3: both
         |  -- engines compare the strictly-after condition on identical values
@@ -1159,8 +1134,8 @@ object Events {
         |SELECT 2, 'click_after_view', (SELECT count(*) FROM c)
         |UNION ALL
         |SELECT 3, 'purchase_after_click', (SELECT count(*) FROM p)
-        |ORDER BY stage""".stripMargin,
-    "ev7_latest_state" ->
+        |ORDER BY stage""".stripMargin),
+    QueryDef("ev7_latest_state", latestState,
       """WITH e AS (
         |  -- microsecond truncation first, the ev3/ev6 convention: both
         |  -- engines rank on identical timestamp values
@@ -1172,8 +1147,8 @@ object Events {
         |SELECT user_id, epoch_ms(ts) AS last_ts_ms,
         |  event_type AS last_event_type, value AS last_value
         |FROM e WHERE rn = 1
-        |ORDER BY user_id""".stripMargin,
-    "ev11_resample" ->
+        |ORDER BY user_id""".stripMargin),
+    QueryDef("ev11_resample", resample,
       """WITH e AS (
         |  SELECT user_id, date_trunc('day', CAST(ts AS TIMESTAMP)) AS day, value
         |  FROM events),
@@ -1193,8 +1168,8 @@ object Events {
         |    PARTITION BY user_id ORDER BY day
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0.0) AS filled_value
         |FROM j
-        |ORDER BY user_id, day_ms""".stripMargin,
-    "ev10_anomaly" ->
+        |ORDER BY user_id, day_ms""".stripMargin),
+    QueryDef("ev10_anomaly", anomalies,
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms, value
         |  FROM events),
@@ -1209,8 +1184,8 @@ object Events {
         |SELECT user_id, event_id, ts_ms, value, mean_7d, sd_7d
         |FROM s
         |WHERE n_7d >= 10 AND sd_7d > 0 AND abs(value - mean_7d) > 2 * sd_7d
-        |ORDER BY event_id""".stripMargin,
-    "ev9_retention" ->
+        |ORDER BY event_id""".stripMargin),
+    QueryDef("ev9_retention", retention,
       """WITH act AS (
         |  SELECT DISTINCT user_id, date_trunc('day', CAST(ts AS TIMESTAMP)) AS day
         |  FROM events),
@@ -1221,8 +1196,8 @@ object Events {
         |  count(*) AS n_users
         |FROM act a JOIN cohort c ON a.user_id = c.user_id
         |GROUP BY 1, 2
-        |ORDER BY cohort_day_ms, day_offset""".stripMargin,
-    "ev8_merge_upsert" ->
+        |ORDER BY cohort_day_ms, day_offset""".stripMargin),
+    QueryDef("ev8_merge_upsert", mergeUpsert,
       """WITH e AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
         |    event_type, value
@@ -1240,8 +1215,8 @@ object Events {
         |  CASE WHEN base_user IS NULL THEN 'insert' ELSE 'update' END AS change
         |FROM (SELECT * FROM delta WHERE rn = 1) d
         |LEFT JOIN base ON d.user_id = base_user
-        |ORDER BY d.user_id""".stripMargin,
-    "ev16_merge_full" ->
+        |ORDER BY d.user_id""".stripMargin),
+    QueryDef("ev16_merge_full", mergeFull,
       """WITH e AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
         |    event_type, value
@@ -1264,6 +1239,6 @@ object Events {
         |       ELSE 'update' END AS change
         |FROM d LEFT JOIN base ON d.user_id = base_user
         |WHERE NOT tomb OR base_user IS NOT NULL
-        |ORDER BY d.user_id""".stripMargin
+        |ORDER BY d.user_id""".stripMargin)
   )
 }

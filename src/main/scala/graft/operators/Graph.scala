@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.t
 
 /** Graph analytics over relationship structure the engine already mines:
@@ -864,15 +865,7 @@ object Graph {
       .orderBy("component", "l_partkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pr1_pagerank" -> pagerank,
-    "gr2_triangles" -> triangles,
-    "gr3_link_prediction" -> linkPrediction,
-    "gr4_clustering_coefficient" -> clusteringCoefficient,
-    "gr5_components" -> components
-  )
-
-  val oracle: Map[String, String] = {
+  val registry: Seq[QueryDef] = {
     val iter = (k: Int) =>
       s""" c$k AS (
          |  SELECT dst, sum(r / deg) AS contrib
@@ -882,8 +875,8 @@ object Graph {
          |  SELECT d.doc_id,
          |    0.15 / (SELECT n FROM np) + 0.85 * coalesce(contrib, 0.0) AS r
          |  FROM documents d LEFT JOIN c$k ON d.doc_id = dst),""".stripMargin
-    Map(
-      "gr4_clustering_coefficient" ->
+    Seq(
+      QueryDef("gr4_clustering_coefficient", clusteringCoefficient,
         s"""WITH $sqlBasketCte,
           | e AS (
           |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
@@ -909,8 +902,8 @@ object Graph {
           |    / (d.degree * (d.degree - 1)), 6) AS clustering
           |FROM deg d LEFT JOIN tp USING (l_partkey)
           |WHERE d.degree >= 2
-          |ORDER BY l_partkey""".stripMargin,
-      "gr5_components" ->
+          |ORDER BY l_partkey""".stripMargin),
+      QueryDef("gr5_components", components,
         s"""WITH $sqlBasketCte,
           | e AS (
           |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
@@ -938,8 +931,8 @@ object Graph {
           |SELECT l3.id AS l_partkey, l3.lbl AS component,
           |  sizes.component_size, l3.lbl = l2.lbl AS converged
           |FROM l3 JOIN sizes USING (lbl) JOIN l2 ON l3.id = l2.id
-          |ORDER BY component, l_partkey""".stripMargin,
-      "gr3_link_prediction" ->
+          |ORDER BY component, l_partkey""".stripMargin),
+      QueryDef("gr3_link_prediction", linkPrediction,
         s"""WITH $sqlBasketCte,
           | e AS (
           |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
@@ -963,8 +956,8 @@ object Graph {
           |FROM open_w JOIN deg ON y = src
           |GROUP BY x, z
           |ORDER BY adamic_adar DESC, n_common DESC, x, z
-          |LIMIT 20""".stripMargin,
-      "gr2_triangles" ->
+          |LIMIT 20""".stripMargin),
+      QueryDef("gr2_triangles", triangles,
         s"""WITH $sqlBasketCte,
           | e AS (
           |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
@@ -981,8 +974,8 @@ object Graph {
           |  UNION ALL SELECT z FROM tri)
           |SELECT l_partkey, count(*) AS n_triangles
           |FROM nodes GROUP BY l_partkey
-          |ORDER BY n_triangles DESC, l_partkey""".stripMargin,
-      "pr1_pagerank" ->
+          |ORDER BY n_triangles DESC, l_partkey""".stripMargin),
+      QueryDef("pr1_pagerank", pagerank,
         (s"""WITH ${Dedup.dd3CtesFrom("documents", "x.doc_id < y.doc_id")},
            | pairs AS (${Dedup.dd3PairSelect}),
            | edges AS (
@@ -1000,7 +993,7 @@ object Graph {
              |SELECT doc_id,
              |  round(r * (SELECT n FROM np), 6) AS pagerank_scaled
              |FROM fin
-             |ORDER BY doc_id""".stripMargin)
+             |ORDER BY doc_id""".stripMargin))
     )
   }
 }

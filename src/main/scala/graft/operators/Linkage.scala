@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.{r6, t}
 
 /** Structured-record entity resolution (record linkage): find the record
@@ -215,13 +216,6 @@ object Linkage {
       .orderBy("rec_a", "rec_b")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "er1_record_linkage" -> er1RecordLinkage,
-    "er2_golden_records" -> er2GoldenRecords,
-    "er3_blocking_metrics" -> er3BlockingMetrics,
-    "er4_jaro_winkler" -> er4JaroWinkler
-  )
-
   /** The recs → keys → cand CTE chain shared by every er* oracle — ONE
     * definition, mirroring [[dirtyContacts]] + [[candidatePairs]].
     */
@@ -251,21 +245,21 @@ object Linkage {
       |    ON x.k = y.k AND x.nation = y.nation AND x.bk = y.bk
       |   AND x.rec_id < y.rec_id)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "er1_record_linkage" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("er1_record_linkage", er1RecordLinkage,
       (s"WITH $SharedCandCtes\n" +
         """SELECT rec_a, rec_b, name_a, name_b,
         |  levenshtein(name_a, name_b) AS edit_dist, bal_a AS acctbal
         |FROM cand
         |WHERE levenshtein(name_a, name_b) <= 1 AND bal_a = bal_b
-        |ORDER BY rec_a, rec_b""".stripMargin),
-    "er4_jaro_winkler" ->
+        |ORDER BY rec_a, rec_b""".stripMargin)),
+    QueryDef("er4_jaro_winkler", er4JaroWinkler,
       (s"WITH $SharedCandCtes\n" +
         """SELECT rec_a, rec_b,
         |  round(jaro_winkler_similarity(name_a, name_b), 6) AS jw
         |FROM cand
-        |ORDER BY rec_a, rec_b""".stripMargin),
-    "er3_blocking_metrics" ->
+        |ORDER BY rec_a, rec_b""".stripMargin)),
+    QueryDef("er3_blocking_metrics", er3BlockingMetrics,
       (s"WITH $SharedCandCtes,\n" +
         """ st AS (
         |  SELECT count(*) AS n_records,
@@ -286,8 +280,8 @@ object Linkage {
         |    AS pairs_completeness,
         |  round(n_matched_true / CAST(n_matched AS DOUBLE), 6)
         |    AS pairs_quality
-        |FROM st, ca""".stripMargin),
-    "er2_golden_records" ->
+        |FROM st, ca""".stripMargin)),
+    QueryDef("er2_golden_records", er2GoldenRecords,
       (s"WITH $SharedCandCtes,\n" +
         """ ver AS (
         |  SELECT rec_a, rec_b FROM cand
@@ -304,6 +298,6 @@ object Linkage {
         |  min_by(acctbal, rec_id) AS acctbal
         |FROM g
         |GROUP BY entity_id
-        |ORDER BY entity_id""".stripMargin)
+        |ORDER BY entity_id""".stripMargin))
   )
 }

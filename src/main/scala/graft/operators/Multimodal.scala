@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.QueryDef
+
 /** Multimodal column operators (north-star extension): image/audio/video
   * payloads as opaque `binary` columns with typed metadata, decoded by
   * REAL pure-JVM codecs ([[MediaCodecs]]: PNM rasters, RIFF/WAVE audio)
@@ -839,25 +841,10 @@ object Multimodal {
       .orderBy("media_id", "patch_row", "patch_col")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm12_audio_fingerprint" -> audioFingerprint,
-    "mm11_vad_segments" -> vadSegments,
-    "mm10_patchify" -> patchify,
-    "mm9_audio_resample" -> audioResample,
-    "mm8_image_neardups" -> imageNearDups,
-    "mm1_media_profile" -> mediaProfile,
-    "mm2_media_features" -> mediaFeatures,
-    "mm3_frame_sample" -> frameSample,
-    "mm4_image_stats" -> imageStats,
-    "mm5_audio_stats" -> audioStats,
-    "mm6_keyframes" -> keyframes,
-    "mm7_image_resize" -> imageResize
-  )
-
-  val oracle: Map[String, String] = Map(
+  val registry: Seq[QueryDef] = Seq(
     // Frame energies and every fingerprint bit recomputed from the text;
     // group stats re-derived with a window over the same key.
-    "mm12_audio_fingerprint" ->
+    QueryDef("mm12_audio_fingerprint", audioFingerprint,
       """WITH s AS (
         |  SELECT doc_id AS media_id,
         |    regexp_replace(text, '[^\x20-\x7E]', '', 'g') AS st
@@ -887,11 +874,11 @@ object Multimodal {
         |  CAST(count(*) OVER (PARTITION BY n_bits, fp) AS BIGINT)
         |    AS group_size
         |FROM fp
-        |ORDER BY media_id""".stripMargin,
+        |ORDER BY media_id""".stripMargin),
     // Frame energies recomputed from the text: frame f covers chars
     // [f*80+1, f*80+80]; islands re-derived with the same row_number
     // difference, so a shifted frame or boundary breaks the hash.
-    "mm11_vad_segments" ->
+    QueryDef("mm11_vad_segments", vadSegments,
       """WITH s AS (
         |  SELECT doc_id AS media_id,
         |    regexp_replace(text, '[^\x20-\x7E]', '', 'g') AS st
@@ -926,8 +913,8 @@ object Multimodal {
         |  start_frame * 10 AS start_ms, (end_frame + 1) * 10 AS end_ms,
         |  mean_rms
         |FROM seg
-        |ORDER BY media_id, seg_idx""".stripMargin,
-    "mm10_patchify" ->
+        |ORDER BY media_id, seg_idx""".stripMargin),
+    QueryDef("mm10_patchify", patchify,
       """WITH s AS (
         |  SELECT doc_id, regexp_replace(text, '[^\x20-\x7E]', '', 'g') AS st
         |  FROM documents WHERE doc_id % 3 = 0),
@@ -958,8 +945,8 @@ object Multimodal {
         |    AS mean_byte,
         |  CAST(max(v) AS BIGINT) AS max_byte
         |FROM f GROUP BY media_id, y // 2, x // 2
-        |ORDER BY media_id, patch_row, patch_col""".stripMargin,
-    "mm9_audio_resample" ->
+        |ORDER BY media_id, patch_row, patch_col""".stripMargin),
+    QueryDef("mm9_audio_resample", audioResample,
       """WITH s AS (
         |  SELECT doc_id AS media_id,
         |    regexp_replace(text, '[^\x20-\x7E]', '', 'g') AS st
@@ -980,12 +967,12 @@ object Multimodal {
         |  END AS mean_out,
         |  md5(dec) AS out_fp
         |FROM d
-        |ORDER BY media_id""".stripMargin,
+        |ORDER BY media_id""".stripMargin),
     // mm8: the thumbnail grid, grayscale and comparison bits recompute
     // from the text payload at the same integer offsets the JVM parser
     // reads; the pair set is ALL-PAIRS Hamming <= 7 (banding has exact
     // recall at this threshold by pigeonhole, so the sets must agree).
-    "mm8_image_neardups" ->
+    QueryDef("mm8_image_neardups", imageNearDups,
       """WITH s AS (
         |  SELECT doc_id AS media_id,
         |    regexp_replace(text, '[^\x20-\x7E]', '', 'g') AS st
@@ -1018,10 +1005,10 @@ object Multimodal {
         |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
         |FROM hsh a JOIN hsh b ON a.media_id < b.media_id
         |WHERE bit_count(xor(a.dhash, b.dhash)) <= 7
-        |ORDER BY media_a, media_b""".stripMargin,
+        |ORDER BY media_a, media_b""".stripMargin),
     // Durations derive from the planted payload sizes: nb samples at
     // 8 kHz = nb/8 ms of audio; nb div 192 frames at 25 fps = 40 ms each.
-    "mm1_media_profile" ->
+    QueryDef("mm1_media_profile", mediaProfile,
       """WITH s AS (
         |  SELECT doc_id,
         |    length(regexp_replace(text, '[^\x20-\x7E]', '', 'g')) AS nb
@@ -1033,14 +1020,14 @@ object Multimodal {
         |           WHEN 2 THEN (nb // 192) * 40 ELSE 0 END) AS BIGINT) AS total_duration_ms
         |FROM s
         |GROUP BY 1, 2
-        |ORDER BY kind, format""".stripMargin,
+        |ORDER BY kind, format""".stripMargin),
     // The real decoders' byte streams, recomputed from the text column:
     // decoded bytes are the format's sample region (full pixel rows for
     // P6, the whole PCM payload for WAV, whole 192-byte frames for the
     // stream); header bytes are the PPM header ("P6\n<w> <h>\n255\n" =
     // 9 + digits(w) + digits(h)), the canonical 44-byte WAV header, or 12
     // bytes per stream frame.
-    "mm2_media_features" ->
+    QueryDef("mm2_media_features", mediaFeatures,
       """WITH s AS (
         |  SELECT doc_id,
         |    CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
@@ -1068,11 +1055,11 @@ object Multimodal {
         |  round(CAST(sum(f0) AS DOUBLE) / sum(dec), 6) AS f0_share
         |FROM h
         |GROUP BY kind
-        |ORDER BY kind""".stripMargin,
+        |ORDER BY kind""".stripMargin),
     // Frames recomputed from the text column: frame i's raster is chars
     // [i*192+1, i*192+192], and the md5 fingerprints agree byte-for-byte
     // because the payload is one byte per character.
-    "mm3_frame_sample" ->
+    QueryDef("mm3_frame_sample", frameSample,
       """WITH s AS (
         |  SELECT doc_id AS media_id,
         |    regexp_replace(text, '[^\x20-\x7E]', '', 'g') AS st
@@ -1084,10 +1071,10 @@ object Multimodal {
         |  CAST(192 AS BIGINT) AS frame_bytes,
         |  md5(substr(st, CAST(frame_idx * 192 + 1 AS BIGINT), 192)) AS frame_fp
         |FROM fr
-        |ORDER BY media_id, frame_idx""".stripMargin,
+        |ORDER BY media_id, frame_idx""".stripMargin),
     // Dims recomputed arithmetically (width 4+doc_id%13, height
     // nb div 3w); the Spark side reads them out of the binary header.
-    "mm4_image_stats" ->
+    QueryDef("mm4_image_stats", imageStats,
       """WITH s AS (
         |  SELECT doc_id, regexp_replace(text, '[^\x20-\x7E]', '', 'g') AS st
         |  FROM documents WHERE doc_id % 3 = 0),
@@ -1103,10 +1090,10 @@ object Multimodal {
         |      i -> ord(st[i])), 'sum') AS DOUBLE) / (3 * width * height), 6)
         |  END AS mean_byte
         |FROM d
-        |ORDER BY media_id""".stripMargin,
+        |ORDER BY media_id""".stripMargin),
     // fmt fields are the planted constants (PCM mono 8 kHz 8-bit); sample
     // count/duration and the PCM byte folds recompute from the text.
-    "mm5_audio_stats" ->
+    QueryDef("mm5_audio_stats", audioStats,
       """WITH s AS (
         |  SELECT doc_id, regexp_replace(text, '[^\x20-\x7E]', '', 'g') AS st
         |  FROM documents WHERE doc_id % 3 = 1),
@@ -1126,11 +1113,11 @@ object Multimodal {
         |  CASE WHEN n > 0 THEN round(CAST(sb AS DOUBLE) / n, 6) END AS mean_sample,
         |  CASE WHEN n > 0 THEN round(sqrt(CAST(sq AS DOUBLE) / n), 6) END AS rms_dev
         |FROM a
-        |ORDER BY media_id""".stripMargin,
+        |ORDER BY media_id""".stripMargin),
     // Inter-frame byte diffs recomputed from the text: frame i's raster
     // is chars [i*192+1, i*192+192], the mean |cur - prev| over the 192
     // positions matches the codec walk byte-for-byte.
-    "mm6_keyframes" ->
+    QueryDef("mm6_keyframes", keyframes,
       """WITH s AS (
         |  SELECT doc_id AS media_id,
         |    regexp_replace(text, '[^\x20-\x7E]', '', 'g') AS st
@@ -1151,12 +1138,12 @@ object Multimodal {
         |  CASE WHEN frame_idx = 0 THEN TRUE
         |       ELSE mean_abs_diff > 28.0 END AS is_keyframe
         |FROM d
-        |ORDER BY media_id, frame_idx""".stripMargin,
+        |ORDER BY media_id, frame_idx""".stripMargin),
     // Resized raster recomputed from the text: output pixel i of the
     // ceil-halved grid copies the 3 chars at source offset
     // ((2r)w + 2c)*3, r = i div rw, c = i mod rw — the same
     // stride walk the codec-side resize runs.
-    "mm7_image_resize" ->
+    QueryDef("mm7_image_resize", imageResize,
       """WITH s AS (
         |  SELECT doc_id AS media_id,
         |    regexp_replace(text, '[^\x20-\x7E]', '', 'g') AS st
@@ -1185,6 +1172,6 @@ object Multimodal {
         |  END AS mean_byte,
         |  md5(rs) AS resized_fp
         |FROM r
-        |ORDER BY media_id""".stripMargin
+        |ORDER BY media_id""".stripMargin)
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.{r6, t}
 
 /** Declarative data-quality constraint checking — the dbt-test /
@@ -349,19 +350,9 @@ object Quality {
     }.mkString("SELECT * FROM (\n", "\nUNION ALL\n",
       "\n) ORDER BY determinant, dependent")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq7_fd_discovery" -> dq7FdDiscovery,
-    "dq6_reconciliation" -> dq6Reconciliation,
-    "dq1_constraint_report" -> dq1ConstraintReport,
-    "dq2_accepted_cross_report" -> dq2AcceptedAndCross,
-    "dq3_mad_outliers" -> dq3MadOutliers,
-    "dq4_volume_anomaly" -> dq4VolumeAnomaly,
-    "dq5_freshness" -> dq5Freshness
-  )
-
-  val oracle: Map[String, String] = Map(
-    "dq7_fd_discovery" -> dq7OracleSql,
-    "dq6_reconciliation" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("dq7_fd_discovery", dq7FdDiscovery, dq7OracleSql),
+    QueryDef("dq6_reconciliation", dq6Reconciliation,
       """WITH c AS (
         |  SELECT l_orderkey,
         |    sum(CAST(round(l_extendedprice * 100) AS BIGINT)
@@ -388,8 +379,8 @@ object Quality {
         |  round(count(*) / (SELECT count(*)::DOUBLE FROM orders), 6) AS share
         |FROM b2
         |GROUP BY band
-        |ORDER BY band""".stripMargin,
-    "dq1_constraint_report" ->
+        |ORDER BY band""".stripMargin),
+    QueryDef("dq1_constraint_report", dq1ConstraintReport,
       """SELECT * FROM (
         |  SELECT 'customer_pk_unique' AS "constraint",
         |    (SELECT count(*) FROM (SELECT c_custkey FROM customer
@@ -414,8 +405,8 @@ object Quality {
         |  SELECT 'orders_fk_customer',
         |    (SELECT count(*) FROM orders r WHERE NOT EXISTS
         |      (SELECT 1 FROM customer c WHERE c.c_custkey = r.o_custkey)))
-        |ORDER BY "constraint"""".stripMargin,
-    "dq2_accepted_cross_report" ->
+        |ORDER BY "constraint"""".stripMargin),
+    QueryDef("dq2_accepted_cross_report", dq2AcceptedAndCross,
       """SELECT * FROM (
         |  SELECT 'events_type_accepted_values' AS "constraint",
         |    (SELECT count(*) FROM events WHERE event_type NOT IN
@@ -436,8 +427,8 @@ object Quality {
         |  UNION ALL
         |  SELECT 'orders_totalprice_nonnegative',
         |    (SELECT count(*) FROM orders WHERE o_totalprice < 0))
-        |ORDER BY "constraint"""".stripMargin,
-    "dq3_mad_outliers" ->
+        |ORDER BY "constraint"""".stripMargin),
+    QueryDef("dq3_mad_outliers", dq3MadOutliers,
       """WITH v AS (
         |  SELECT event_type, value FROM events
         |  WHERE value IS NOT NULL AND NOT isnan(value)),
@@ -458,8 +449,8 @@ object Quality {
         |    * 1.0 / count(*), 6) AS outlier_share
         |FROM dev JOIN mad ON dev.event_type = mad.event_type
         |GROUP BY dev.event_type
-        |ORDER BY dev.event_type""".stripMargin,
-    "dq4_volume_anomaly" ->
+        |ORDER BY dev.event_type""".stripMargin),
+    QueryDef("dq4_volume_anomaly", dq4VolumeAnomaly,
       """WITH daily AS (
         |  SELECT ts::DATE AS day, count(*) AS n_events
         |  FROM events GROUP BY 1),
@@ -475,8 +466,8 @@ object Quality {
         |    THEN abs(daily.n_events - trail.trailing_med)
         |      > trail.trailing_med * 0.5 END AS anomaly
         |FROM daily LEFT JOIN trail ON daily.day = trail.day
-        |ORDER BY daily.day""".stripMargin,
-    "dq5_freshness" ->
+        |ORDER BY daily.day""".stripMargin),
+    QueryDef("dq5_freshness", dq5Freshness,
       """WITH pt AS (
         |  SELECT event_type, max(ts) AS last_ts, count(*) AS n_events
         |  FROM events GROUP BY 1)
@@ -484,6 +475,6 @@ object Quality {
         |  round((epoch_ms(max(last_ts) OVER ()) - epoch_ms(last_ts))
         |    / 3600000.0, 6) AS hours_behind
         |FROM pt
-        |ORDER BY event_type""".stripMargin
+        |ORDER BY event_type""".stripMargin)
   )
 }

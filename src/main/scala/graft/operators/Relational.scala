@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables.{t, r2, r2s, r6, r6s}
 
 /** Relational query surface (SURVEY.md §2.5): aggregations, joins, windows,
@@ -2006,88 +2007,23 @@ object Relational {
       .orderBy("o_custkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "seg1_rfm" -> seg1Rfm,
-    "seg1_rfm_approx" -> seg1RfmApproxGate,
-    "sql4_recursive_rollup" -> sql4RecursiveRollup,
-    "sql3_window_facade" -> sql3WindowFacade,
-    "sql1_revenue_by_nation" -> sql1RevenueByNation,
-    "sql2_correlated_scalar" -> sql2CorrelatedScalar,
-    "p1_pivot_segments" -> p1PivotSegments,
-    "a1_array_functions" -> a1ArrayFunctions,
-    "pct1_percentiles" -> pct1Percentiles,
-    "q4_late_priority" -> q4LatePriority,
-    "q12_priority_mix" -> q12PriorityMix,
-    "q14_promo_share" -> q14PromoShare,
-    "q17_small_quantity" -> q17SmallQuantity,
-    "q13_name_pattern" -> q13NamePattern,
-    "q6_forecast_revenue" -> q6ForecastRevenue,
-    "q7_volume_shipping" -> q7VolumeShipping,
-    "q8_market_share" -> q8MarketShare,
-    "q9_product_profit" -> q9ProductProfit,
-    "q15_top_supplier" -> q15TopSupplier,
-    "q16_supplier_counts" -> q16SupplierCounts,
-    "q21_sole_supplier" -> q21SoleSupplier,
-    "q22_idle_balance" -> q22IdleBalance,
-    "q23_mom_growth" -> q23MomGrowth,
-    "q2_min_cost_supplier" -> q2MinCostSupplier,
-    "q11_important_parts" -> q11ImportantParts,
-    "q20_excess_suppliers" -> q20ExcessSuppliers,
-    "prof4_mutual_information" -> prof4MutualInformation,
-    "prof5_fd_histogram" -> prof5FdHistogram,
-    "prof10_joint_histogram" -> prof10JointHistogram,
-    "prof6_spearman" -> prof6Spearman,
-    "prof7_profile_sketch" -> prof7ProfileSketch,
-    "prof8_equidepth_sketch" -> prof8EquidepthSketch,
-    "prof9_benford" -> prof9Benford,
-    "m1_unpivot" -> m1Unpivot,
-    "w5_gap_fill" -> w5GapFill,
-    "w6_distribution_ranks" -> w6DistributionRanks,
-    "q18_large_orders" -> q18LargeOrders,
-    "q19_brand_revenue" -> q19BrandRevenue,
-    "q1_pricing_summary" -> q1PricingSummary,
-    "q3_shipping_priority" -> q3ShippingPriority,
-    "q5_region_revenue" -> q5RegionRevenue,
-    "q10_returned_top" -> q10ReturnedTop,
-    "w1_top_orders_per_customer" -> w1TopOrdersPerCustomer,
-    "w2_running_totals" -> w2RunningTotals,
-    "w3_range_frame" -> w3RangeFrame,
-    "w4_value_navigation" -> w4ValueNavigation,
-    "prof1_column_profile" -> prof1ColumnProfile,
-    "prof2_equidepth_histogram" -> prof2EquiDepthHistogram,
-    "prof3_correlation_matrix" -> prof3CorrelationMatrix,
-    "set1_priority_customers" -> set1PriorityCustomers,
-    "set2_multiset_ops" -> set2MultisetOps,
-    "topk_parts_by_quantity" -> topkPartsByQuantity,
-    "g1_rollup_acctbal" -> g1RollupAcctbal,
-    "g2_grouping_sets_orders" -> g2GroupingSetsOrders,
-    "g3_cube_orders" -> g3CubeOrders,
-    "j1_semi_anti_counts" -> j1SemiAntiCounts,
-    "j4_bloom_join" -> j4BloomJoin,
-    "j5_bucketed_join" -> j5BucketedJoin,
-    "j3_full_outer" -> j3FullOuter,
-    "s1_scalar_functions" -> s1ScalarFunctions,
-    "s2_datetime_functions" -> s2DatetimeFunctions,
-    "j2_events_json" -> j2EventsJson
-  )
-
-  val oracle: Map[String, String] = Map(
+  val registry: Seq[QueryDef] = Seq(
     // prof8's PARTIAL oracle (r18): exact total hash-gates the carve;
     // depth_ok is Spark's in-query sketch-depth bound, TRUE by contract
     // (see prof8EquidepthSketch's scaladoc) — DuckDB emits the literal,
     // so an out-of-tolerance sketch hash-FAILS.
-    "prof8_equidepth_sketch" ->
+    QueryDef("prof8_equidepth_sketch", prof8EquidepthSketch,
       """WITH tot AS (
         |  SELECT CAST(count(value) AS BIGINT) AS n_total FROM events)
         |SELECT bucket, n_total, TRUE AS depth_ok
         |FROM (SELECT unnest(generate_series(1, 8)) AS bucket) b
         |CROSS JOIN tot
-        |ORDER BY bucket""".stripMargin,
+        |ORDER BY bucket""".stripMargin),
     // prof7's PARTIAL oracle (r19): every exact profile column
     // hash-gates; nd_ok is Spark's in-query HLL-vs-exact bound, TRUE by
     // contract (see prof7ProfileSketch's scaladoc) — DuckDB emits the
     // literal, so an out-of-tolerance estimate hash-FAILS.
-    "prof7_profile_sketch" ->
+    QueryDef("prof7_profile_sketch", prof7ProfileSketch,
       """WITH s AS (SELECT * FROM customer)
         |SELECT * FROM (
         |  SELECT 'c_custkey' AS column_name, count(*) AS n_rows,
@@ -2111,12 +2047,12 @@ object Relational {
         |  UNION ALL
         |  SELECT 'c_mktsegment', count(*), count(*) - count(c_mktsegment),
         |    NULL, NULL, min(c_mktsegment), max(c_mktsegment), TRUE FROM s)
-        |ORDER BY column_name""".stripMargin,
+        |ORDER BY column_name""".stripMargin),
     // seg1_rfm_approx's PARTIAL oracle (r19): the exact per-customer
     // metric frame hash-gates (identical to seg1_rfm minus the scores);
     // cuts_ok is Spark's in-query GK rank-error bound, TRUE by contract
     // (see seg1RfmApproxGate's scaladoc).
-    "seg1_rfm_approx" ->
+    QueryDef("seg1_rfm_approx", seg1RfmApproxGate,
       """WITH per AS (
         |  SELECT o_custkey,
         |    max(CAST(o_orderdate AS DATE)) AS last_d,
@@ -2131,8 +2067,8 @@ object Relational {
         |  round(sum_cents / 100.0, 2) AS monetary,
         |  TRUE AS cuts_ok
         |FROM per
-        |ORDER BY o_custkey""".stripMargin,
-    "seg1_rfm" ->
+        |ORDER BY o_custkey""".stripMargin),
+    QueryDef("seg1_rfm", seg1Rfm,
       """WITH per AS (
         |  SELECT o_custkey,
         |    max(CAST(o_orderdate AS DATE)) AS last_d,
@@ -2165,10 +2101,10 @@ object Relational {
         |    WHEN r_score <= 2 THEN 'hibernating'
         |    ELSE 'regular' END AS segment
         |FROM sc
-        |ORDER BY o_custkey""".stripMargin,
-    "sql4_recursive_rollup" -> SharedRecursiveSql,
-    "sql3_window_facade" -> SharedWindowSql,
-    "q23_mom_growth" ->
+        |ORDER BY o_custkey""".stripMargin),
+    QueryDef("sql4_recursive_rollup", sql4RecursiveRollup, SharedRecursiveSql),
+    QueryDef("sql3_window_facade", sql3WindowFacade, SharedWindowSql),
+    QueryDef("q23_mom_growth", q23MomGrowth,
       """WITH m AS (
         |  SELECT n_name, strftime(o_orderdate::DATE, '%Y-%m') AS month,
         |    sum(CAST(round(l_extendedprice * 100.0) AS BIGINT)
@@ -2185,14 +2121,14 @@ object Relational {
         |    / lag(revenue) OVER w, 6) + 0 AS mom_growth
         |FROM m
         |WINDOW w AS (PARTITION BY n_name ORDER BY month)
-        |ORDER BY n_name, month""".stripMargin,
-    "j5_bucketed_join" ->
+        |ORDER BY n_name, month""".stripMargin),
+    QueryDef("j5_bucketed_join", j5BucketedJoin,
       """SELECT o_orderpriority, count(*) AS n_lines,
         |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "s2_datetime_functions" ->
+        |ORDER BY 1""".stripMargin),
+    QueryDef("s2_datetime_functions", s2DatetimeFunctions,
       """SELECT o_orderkey,
         |  CAST(isodow(o_orderdate::DATE) AS BIGINT) AS iso_dow,
         |  CAST(week(o_orderdate::DATE) AS BIGINT) AS iso_week,
@@ -2204,8 +2140,8 @@ object Relational {
         |    AS days_since_anchor,
         |  strftime(o_orderdate::DATE, '%Y-%m') AS ym
         |FROM orders
-        |ORDER BY o_orderkey""".stripMargin,
-    "w6_distribution_ranks" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    QueryDef("w6_distribution_ranks", w6DistributionRanks,
       """SELECT c_mktsegment, c_custkey, c_acctbal,
         |  round(percent_rank() OVER w, 6) AS pct_rank,
         |  round(cume_dist() OVER w, 6) AS cume,
@@ -2213,8 +2149,8 @@ object Relational {
         |FROM customer
         |WINDOW w AS (PARTITION BY c_mktsegment
         |  ORDER BY c_acctbal, c_custkey)
-        |ORDER BY c_mktsegment, c_custkey""".stripMargin,
-    "prof9_benford" ->
+        |ORDER BY c_mktsegment, c_custkey""".stripMargin),
+    QueryDef("prof9_benford", prof9Benford,
       """WITH d AS (
         |  SELECT CAST(substr(CAST(CAST(round(l_extendedprice * 100.0, 0)
         |      AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER) AS digit
@@ -2227,10 +2163,11 @@ object Relational {
         |      * (n - log10(1.0 + 1.0 / digit) * sum(n) OVER ())
         |      / (log10(1.0 + 1.0 / digit) * sum(n) OVER ()), 6) AS chisq_term
         |FROM c
-        |ORDER BY digit""".stripMargin,
-    "sql1_revenue_by_nation" -> SharedRevenueSql,
-    "sql2_correlated_scalar" -> SharedScalarSubquerySql,
-    "p1_pivot_segments" ->
+        |ORDER BY digit""".stripMargin),
+    QueryDef("sql1_revenue_by_nation", sql1RevenueByNation, SharedRevenueSql),
+    QueryDef("sql2_correlated_scalar", sql2CorrelatedScalar,
+      SharedScalarSubquerySql),
+    QueryDef("p1_pivot_segments", p1PivotSegments,
       """SELECT n_name,
         |  round(sum(CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN c_acctbal END), 2) AS "AUTOMOBILE",
         |  round(sum(CASE WHEN c_mktsegment = 'BUILDING' THEN c_acctbal END), 2) AS "BUILDING",
@@ -2239,8 +2176,8 @@ object Relational {
         |  round(sum(CASE WHEN c_mktsegment = 'MACHINERY' THEN c_acctbal END), 2) AS "MACHINERY"
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
-    "a1_array_functions" ->
+        |ORDER BY n_name""".stripMargin),
+    QueryDef("a1_array_functions", a1ArrayFunctions,
       """SELECT vec_id,
         |  CAST(len(embedding) AS BIGINT) AS dim,
         |  round(CAST(list_min(embedding) AS DOUBLE), 4) + 0 AS v_min,
@@ -2249,16 +2186,16 @@ object Relational {
         |  round(CAST(list_element(list_slice(embedding, 1, 4), 4) AS DOUBLE), 4) + 0 AS v4,
         |  round(CAST(list_element(list_sort(embedding), 1) AS DOUBLE), 4) + 0 AS sorted_first
         |FROM embeddings
-        |ORDER BY vec_id""".stripMargin,
-    "pct1_percentiles" ->
+        |ORDER BY vec_id""".stripMargin),
+    QueryDef("pct1_percentiles", pct1Percentiles,
       """SELECT c_mktsegment,
         |  round(quantile_cont(c_acctbal, 0.5), 4) AS median_acctbal,
         |  round(quantile_cont(c_acctbal, 0.9), 4) AS p90_acctbal,
         |  count(*) AS n
         |FROM customer
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    "q4_late_priority" ->
+        |ORDER BY c_mktsegment""".stripMargin),
+    QueryDef("q4_late_priority", q4LatePriority,
       """SELECT o_orderpriority, count(*) AS n_orders
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -2267,8 +2204,8 @@ object Relational {
         |              WHERE l_orderkey = o_orderkey
         |                AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q12_priority_mix" ->
+        |ORDER BY o_orderpriority""".stripMargin),
+    QueryDef("q12_priority_mix", q12PriorityMix,
       """SELECT l_returnflag,
         |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |       THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -2276,26 +2213,26 @@ object Relational {
         |       THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "q14_promo_share" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    QueryDef("q14_promo_share", q14PromoShare,
       """SELECT round(100.0 *
         |  sum(CASE WHEN p_type = 'PROMO'
         |      THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END) /
         |  sum(l_extendedprice * (1.0 - l_discount)), 4) AS promo_revenue_pct
-        |FROM lineitem JOIN part ON l_partkey = p_partkey""".stripMargin,
-    "q17_small_quantity" ->
+        |FROM lineitem JOIN part ON l_partkey = p_partkey""".stripMargin),
+    QueryDef("q17_small_quantity", q17SmallQuantity,
       """SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
         |FROM lineitem l, (SELECT l_partkey AS ak, avg(l_quantity) AS aq
         |                  FROM lineitem GROUP BY l_partkey) a
-        |WHERE l.l_partkey = a.ak AND l.l_quantity < 0.5 * a.aq""".stripMargin,
-    "q6_forecast_revenue" ->
+        |WHERE l.l_partkey = a.ak AND l.l_quantity < 0.5 * a.aq""".stripMargin),
+    QueryDef("q6_forecast_revenue", q6ForecastRevenue,
       """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         |  AND l_shipdate < TIMESTAMP '1997-01-01'
         |  AND l_discount BETWEEN 0.04 AND 0.06
-        |  AND l_quantity < 24""".stripMargin,
-    "q7_volume_shipping" ->
+        |  AND l_quantity < 24""".stripMargin),
+    QueryDef("q7_volume_shipping", q7VolumeShipping,
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
         |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
@@ -2311,8 +2248,8 @@ object Relational {
         |  AND l_shipdate >= TIMESTAMP '1996-01-01'
         |  AND l_shipdate < TIMESTAMP '1998-01-01'
         |GROUP BY 1, 2, 3
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "q8_market_share" ->
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin),
+    QueryDef("q8_market_share", q8MarketShare,
       """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
         |  round(sum(CASE WHEN n1.n_name = 'NATION_5'
         |      THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END) /
@@ -2329,8 +2266,8 @@ object Relational {
         |  AND o_orderdate >= TIMESTAMP '1996-01-01'
         |  AND o_orderdate < TIMESTAMP '1998-01-01'
         |GROUP BY 1
-        |ORDER BY o_year""".stripMargin,
-    "q9_product_profit" ->
+        |ORDER BY o_year""".stripMargin),
+    QueryDef("q9_product_profit", q9ProductProfit,
       """SELECT n_name AS nation,
         |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
         |  round(sum(l_extendedprice * (1.0 - l_discount)
@@ -2341,8 +2278,8 @@ object Relational {
         |JOIN nation ON s_nationkey = n_nationkey
         |WHERE p_name LIKE '%bolt%'
         |GROUP BY 1, 2
-        |ORDER BY nation, l_year DESC""".stripMargin,
-    "q15_top_supplier" ->
+        |ORDER BY nation, l_year DESC""".stripMargin),
+    QueryDef("q15_top_supplier", q15TopSupplier,
       """WITH rev AS (
         |  SELECT l_suppkey,
         |    round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS total_revenue
@@ -2353,8 +2290,8 @@ object Relational {
         |SELECT s_suppkey, s_name, total_revenue
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
         |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q16_supplier_counts" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    QueryDef("q16_supplier_counts", q16SupplierCounts,
       """SELECT p_brand, p_type, p_size,
         |  count(DISTINCT l_suppkey) AS supplier_cnt
         |FROM lineitem
@@ -2363,8 +2300,8 @@ object Relational {
         |  AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
         |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q21_sole_supplier" ->
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
+    QueryDef("q21_sole_supplier", q21SoleSupplier,
       """SELECT s_name, count(DISTINCT l1.l_orderkey) AS n_sole_orders
         |FROM supplier
         |JOIN lineitem l1 ON l1.l_suppkey = s_suppkey
@@ -2377,16 +2314,16 @@ object Relational {
         |    WHERE l3.l_orderkey = l1.l_orderkey
         |      AND l3.l_suppkey <> l1.l_suppkey)
         |GROUP BY s_name
-        |ORDER BY n_sole_orders DESC, s_name""".stripMargin,
-    "q22_idle_balance" ->
+        |ORDER BY n_sole_orders DESC, s_name""".stripMargin),
+    QueryDef("q22_idle_balance", q22IdleBalance,
       """SELECT c_mktsegment, count(*) AS n_custs,
         |  round(sum(c_acctbal), 2) AS total_bal
         |FROM customer
         |WHERE c_acctbal > (SELECT round(avg(c_acctbal), 6) FROM customer WHERE c_acctbal > 0.0)
         |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    "q18_large_orders" ->
+        |ORDER BY c_mktsegment""".stripMargin),
+    QueryDef("q18_large_orders", q18LargeOrders,
       """WITH q AS (
         |  SELECT l_orderkey, round(sum(l_quantity), 2) AS total_qty
         |  FROM lineitem GROUP BY l_orderkey
@@ -2397,8 +2334,8 @@ object Relational {
         |FROM q
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_qty DESC, o_orderkey""".stripMargin,
-    "q19_brand_revenue" ->
+        |ORDER BY total_qty DESC, o_orderkey""".stripMargin),
+    QueryDef("q19_brand_revenue", q19BrandRevenue,
       """SELECT round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
         |  count(*) AS n_lines
         |FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -2407,15 +2344,15 @@ object Relational {
         |   OR (p_brand = 'Brand#13' AND p_size BETWEEN 10 AND 30
         |       AND l_quantity BETWEEN 10 AND 30)
         |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 20 AND 50
-        |       AND l_quantity BETWEEN 20 AND 50)""".stripMargin,
-    "q13_name_pattern" ->
+        |       AND l_quantity BETWEEN 20 AND 50)""".stripMargin),
+    QueryDef("q13_name_pattern", q13NamePattern,
       """SELECT p_type, count(*) AS n_parts,
         |  round(avg(p_retailprice), 6) AS avg_price
         |FROM part
         |WHERE p_name LIKE '%blue%' OR p_name LIKE '%red%'
         |GROUP BY p_type
-        |ORDER BY p_type""".stripMargin,
-    "q1_pricing_summary" ->
+        |ORDER BY p_type""".stripMargin),
+    QueryDef("q1_pricing_summary", q1PricingSummary,
       """SELECT l_returnflag, l_linestatus,
         |  round(sum(l_quantity), 2) AS sum_qty,
         |  round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -2428,8 +2365,8 @@ object Relational {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '2001-09-02 00:00:00'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_shipping_priority" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    QueryDef("q3_shipping_priority", q3ShippingPriority,
       """SELECT o_orderkey, o_orderdate,
         |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
         |FROM customer, orders, lineitem
@@ -2439,8 +2376,8 @@ object Relational {
         |  AND l_shipdate > TIMESTAMP '1998-07-01 00:00:00'
         |GROUP BY o_orderkey, o_orderdate
         |ORDER BY revenue DESC, o_orderkey
-        |LIMIT 10""".stripMargin,
-    "q5_region_revenue" ->
+        |LIMIT 10""".stripMargin),
+    QueryDef("q5_region_revenue", q5RegionRevenue,
       """SELECT n_name,
         |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
         |FROM customer, orders, lineitem, supplier, nation, region
@@ -2451,8 +2388,8 @@ object Relational {
         |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
         |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "q10_returned_top" ->
+        |ORDER BY revenue DESC, n_name""".stripMargin),
+    QueryDef("q10_returned_top", q10ReturnedTop,
       """SELECT c_custkey, c_name, n_name,
         |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
         |FROM lineitem, orders, customer, nation
@@ -2460,24 +2397,24 @@ object Relational {
         |  AND o_custkey = c_custkey AND c_nationkey = n_nationkey
         |GROUP BY c_custkey, c_name, n_name
         |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-    "w1_top_orders_per_customer" ->
+        |LIMIT 20""".stripMargin),
+    QueryDef("w1_top_orders_per_customer", w1TopOrdersPerCustomer,
       """SELECT * FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_custkey
         |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders)
         |WHERE rn <= 3
-        |ORDER BY o_custkey, rn""".stripMargin,
-    "w2_running_totals" ->
+        |ORDER BY o_custkey, rn""".stripMargin),
+    QueryDef("w2_running_totals", w2RunningTotals,
       """SELECT user_id, event_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms,
         |  event_type, value,
         |  round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_value,
         |  lag(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
         |FROM events
-        |ORDER BY user_id, event_id""".stripMargin,
-    "w5_gap_fill" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    QueryDef("w5_gap_fill", w5GapFill,
       """WITH e AS (
         |  SELECT user_id, event_id,
         |    epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms,
@@ -2495,8 +2432,8 @@ object Relational {
         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
         |    AS prev_observed
         |FROM e
-        |ORDER BY user_id, event_id""".stripMargin,
-    "w4_value_navigation" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    QueryDef("w4_value_navigation", w4ValueNavigation,
       """WITH e AS (
         |  SELECT user_id, event_id,
         |    epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms, value
@@ -2512,8 +2449,8 @@ object Relational {
         |FROM e
         |WINDOW wt AS (PARTITION BY user_id ORDER BY ts_ms, event_id
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "w3_range_frame" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    QueryDef("w3_range_frame", w3RangeFrame,
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms, value
         |  FROM events)
@@ -2525,8 +2462,8 @@ object Relational {
         |  CAST(ntile(4) OVER (PARTITION BY user_id
         |    ORDER BY value, event_id) AS BIGINT) AS value_quartile
         |FROM e
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q2_min_cost_supplier" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    QueryDef("q2_min_cost_supplier", q2MinCostSupplier,
       """WITH costs AS (
         |  SELECT p_partkey, p_name, s_suppkey, s_name, s_acctbal, n_name,
         |    round(avg(l_extendedprice / l_quantity), 6) AS supp_cost
@@ -2544,8 +2481,8 @@ object Relational {
         |FROM costs JOIN mc
         |  ON p_partkey = mc_partkey AND supp_cost = min_cost
         |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey, s_suppkey
-        |LIMIT 100""".stripMargin,
-    "q11_important_parts" ->
+        |LIMIT 100""".stripMargin),
+    QueryDef("q11_important_parts", q11ImportantParts,
       """WITH pv AS (
         |  SELECT l_partkey,
         |    sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100)
@@ -2559,8 +2496,8 @@ object Relational {
         |  round(value_cents / 100.0, 2) AS part_value
         |FROM pv, tot
         |WHERE value_cents * 1000 > total_cents
-        |ORDER BY part_value DESC, p_partkey""".stripMargin,
-    "q20_excess_suppliers" ->
+        |ORDER BY part_value DESC, p_partkey""".stripMargin),
+    QueryDef("q20_excess_suppliers", q20ExcessSuppliers,
       """WITH psp AS (
         |  SELECT l_partkey, l_suppkey, sum(l_quantity) AS qty
         |  FROM lineitem
@@ -2576,8 +2513,8 @@ object Relational {
         |JOIN pp ON l_partkey = pp_partkey
         |JOIN supplier ON l_suppkey = s_suppkey
         |WHERE qty * 2 > total_qty AND n_suppliers > 1
-        |ORDER BY s_suppkey""".stripMargin,
-    "m1_unpivot" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    QueryDef("m1_unpivot", m1Unpivot,
       """SELECT l_orderkey, l_linenumber, measure, value FROM (
         |  SELECT l_orderkey, l_linenumber,
         |    'discount' AS measure, l_discount AS value
@@ -2591,8 +2528,8 @@ object Relational {
         |  UNION ALL
         |  SELECT l_orderkey, l_linenumber, 'tax', l_tax
         |  FROM lineitem WHERE l_orderkey % 50 = 0)
-        |ORDER BY l_orderkey, l_linenumber, measure, value""".stripMargin,
-    "prof6_spearman" ->
+        |ORDER BY l_orderkey, l_linenumber, measure, value""".stripMargin),
+    QueryDef("prof6_spearman", prof6Spearman,
       """WITH li AS (SELECT l_quantity AS x, l_discount AS y FROM lineitem),
         | rx AS (
         |  SELECT x, cum + (cnt + 1) / 2.0 AS r_x FROM (
@@ -2608,8 +2545,8 @@ object Relational {
         |  count(*) AS n,
         |  CAST(count(DISTINCT x) AS BIGINT) AS nx_distinct,
         |  CAST(count(DISTINCT y) AS BIGINT) AS ny_distinct
-        |FROM li JOIN rx USING (x) JOIN ry USING (y)""".stripMargin,
-    "prof10_joint_histogram" ->
+        |FROM li JOIN rx USING (x) JOIN ry USING (y)""".stripMargin),
+    QueryDef("prof10_joint_histogram", prof10JointHistogram,
       """WITH v AS (
         |  SELECT (epoch_ms(CAST(ts AS TIMESTAMP)) // 3600000) % 24
         |      AS hour_of_day,
@@ -2630,8 +2567,8 @@ object Relational {
         |    sum(n_events) OVER (PARTITION BY hour_of_day), 6)
         |    AS share_of_hour
         |FROM cells
-        |ORDER BY hour_of_day, bin""".stripMargin,
-    "prof5_fd_histogram" ->
+        |ORDER BY hour_of_day, bin""".stripMargin),
+    QueryDef("prof5_fd_histogram", prof5FdHistogram,
       """WITH v AS (
         |  SELECT value AS v FROM events
         |  WHERE value IS NOT NULL AND NOT isnan(value)),
@@ -2651,8 +2588,8 @@ object Relational {
         |  count(*) AS n, round(min(v), 4) AS lo, round(max(v), 4) AS hi
         |FROM v, spec
         |GROUP BY 1
-        |ORDER BY bin""".stripMargin,
-    "prof4_mutual_information" ->
+        |ORDER BY bin""".stripMargin),
+    QueryDef("prof4_mutual_information", prof4MutualInformation,
       """WITH joint AS (
         |  SELECT o_orderstatus, o_orderpriority, count(*) AS nxy
         |  FROM orders GROUP BY 1, 2),
@@ -2673,8 +2610,8 @@ object Relational {
         |    THEN sum(p * ln(p / (px * py))) /
         |      sqrt(sum(p * ln(px)) * sum(p * ln(py)))
         |    END, 6) + 0 AS nmi
-        |FROM probs""".stripMargin,
-    "prof3_correlation_matrix" ->
+        |FROM probs""".stripMargin),
+    QueryDef("prof3_correlation_matrix", prof3CorrelationMatrix,
       """WITH a AS (
         |  SELECT
         |    round(corr(l_quantity, l_extendedprice), 6) + 0 AS r_qe,
@@ -2698,16 +2635,16 @@ object Relational {
         |  UNION ALL SELECT 'l_extendedprice', 'l_discount', r_ed, c_ed FROM a
         |  UNION ALL SELECT 'l_extendedprice', 'l_tax', r_et, c_et FROM a
         |  UNION ALL SELECT 'l_discount', 'l_tax', r_dt, c_dt FROM a)
-        |ORDER BY col_x, col_y""".stripMargin,
-    "prof2_equidepth_histogram" ->
+        |ORDER BY col_x, col_y""".stripMargin),
+    QueryDef("prof2_equidepth_histogram", prof2EquiDepthHistogram,
       """SELECT bucket, count(*) AS n, min(v) AS lo, max(v) AS hi
         |FROM (
         |  SELECT CAST(ntile(8) OVER (ORDER BY value) AS BIGINT) AS bucket,
         |    value AS v
         |  FROM events WHERE value IS NOT NULL)
         |GROUP BY bucket
-        |ORDER BY bucket""".stripMargin,
-    "prof1_column_profile" ->
+        |ORDER BY bucket""".stripMargin),
+    QueryDef("prof1_column_profile", prof1ColumnProfile,
       """WITH s AS (SELECT * FROM customer)
         |SELECT * FROM (
         |  SELECT 'c_custkey' AS column_name, count(*) AS n_rows,
@@ -2734,8 +2671,8 @@ object Relational {
         |  SELECT 'c_mktsegment', count(*), count(*) - count(c_mktsegment),
         |    count(DISTINCT c_mktsegment), NULL, NULL,
         |    min(c_mktsegment), max(c_mktsegment) FROM s)
-        |ORDER BY column_name""".stripMargin,
-    "set1_priority_customers" ->
+        |ORDER BY column_name""".stripMargin),
+    QueryDef("set1_priority_customers", set1PriorityCustomers,
       """SELECT * FROM (
         |  SELECT 'both' AS tag, o_custkey FROM (
         |    SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
@@ -2750,8 +2687,8 @@ object Relational {
         |  SELECT 'either', o_custkey FROM (
         |    SELECT DISTINCT o_custkey FROM orders
         |    WHERE o_orderpriority IN ('1-URGENT', '5-LOW')))
-        |ORDER BY tag, o_custkey""".stripMargin,
-    "set2_multiset_ops" ->
+        |ORDER BY tag, o_custkey""".stripMargin),
+    QueryDef("set2_multiset_ops", set2MultisetOps,
       """SELECT * FROM (
         |  SELECT 'both_all' AS tag, o_custkey, count(*) AS n FROM (
         |    SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
@@ -2764,54 +2701,54 @@ object Relational {
         |    EXCEPT ALL
         |    SELECT o_custkey FROM orders WHERE o_orderpriority = '5-LOW')
         |  GROUP BY o_custkey)
-        |ORDER BY tag, o_custkey""".stripMargin,
-    "topk_parts_by_quantity" ->
+        |ORDER BY tag, o_custkey""".stripMargin),
+    QueryDef("topk_parts_by_quantity", topkPartsByQuantity,
       """SELECT p_name, l_partkey, round(sum(l_quantity), 2) AS total_qty
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |GROUP BY p_name, l_partkey
         |ORDER BY total_qty DESC, l_partkey
-        |LIMIT 15""".stripMargin,
-    "g1_rollup_acctbal" ->
+        |LIMIT 15""".stripMargin),
+    QueryDef("g1_rollup_acctbal", g1RollupAcctbal,
       """SELECT coalesce(n_name, 'ALL') AS nation,
         |  coalesce(c_mktsegment, 'ALL') AS segment,
         |  count(*) AS n_customers,
         |  round(sum(c_acctbal), 2) AS total_acctbal
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY ROLLUP (n_name, c_mktsegment)
-        |ORDER BY nation, segment""".stripMargin,
-    "g2_grouping_sets_orders" ->
+        |ORDER BY nation, segment""".stripMargin),
+    QueryDef("g2_grouping_sets_orders", g2GroupingSetsOrders,
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |  coalesce(o_orderpriority, 'ALL') AS priority,
         |  count(*) AS n_orders,
         |  round(sum(o_totalprice), 2) AS total_price
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY status, priority""".stripMargin,
-    "g3_cube_orders" ->
+        |ORDER BY status, priority""".stripMargin),
+    QueryDef("g3_cube_orders", g3CubeOrders,
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |  coalesce(o_orderpriority, 'ALL') AS priority,
         |  count(*) AS n_orders,
         |  round(sum(o_totalprice), 2) AS total_price
         |FROM orders
         |GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-    "j4_bloom_join" ->
+        |ORDER BY status, priority""".stripMargin),
+    QueryDef("j4_bloom_join", j4BloomJoin,
       """SELECT o_orderdate, count(*) AS n_lines,
         |  round(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100)
         |    AS BIGINT)) / 100.0, 2) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT'
         |GROUP BY o_orderdate
-        |ORDER BY o_orderdate""".stripMargin,
-    "j3_full_outer" ->
+        |ORDER BY o_orderdate""".stripMargin),
+    QueryDef("j3_full_outer", j3FullOuter,
       """SELECT CAST(coalesce(c_nationkey, s_nationkey) AS BIGINT) AS nationkey,
         |  coalesce(n_customers, 0) AS n_customers,
         |  coalesce(n_suppliers, 0) AS n_suppliers
         |FROM (SELECT c_nationkey, count(*) AS n_customers FROM customer GROUP BY 1) c
         |FULL OUTER JOIN (SELECT s_nationkey, count(*) AS n_suppliers FROM supplier GROUP BY 1) s
         |  ON c_nationkey = s_nationkey
-        |ORDER BY nationkey""".stripMargin,
-    "j1_semi_anti_counts" ->
+        |ORDER BY nationkey""".stripMargin),
+    QueryDef("j1_semi_anti_counts", j1SemiAntiCounts,
       """SELECT * FROM (
         |  SELECT 'customers_with_orders' AS k, count(*) AS n FROM customer
         |  WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
@@ -2821,8 +2758,8 @@ object Relational {
         |  UNION ALL
         |  SELECT 'customers_without_orders', count(*) FROM customer
         |  WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey))
-        |ORDER BY k""".stripMargin,
-    "s1_scalar_functions" ->
+        |ORDER BY k""".stripMargin),
+    QueryDef("s1_scalar_functions", s1ScalarFunctions,
       """SELECT o_orderkey,
         |  CAST(year(o_orderdate) AS BIGINT) AS y,
         |  CAST(month(o_orderdate) AS BIGINT) AS m,
@@ -2834,12 +2771,12 @@ object Relational {
         |  round(sqrt(o_totalprice), 6) AS price_sqrt,
         |  round(ln(o_totalprice), 6) AS price_ln
         |FROM orders
-        |ORDER BY o_orderkey""".stripMargin,
-    "j2_events_json" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    QueryDef("j2_events_json", j2EventsJson,
       """SELECT coalesce(CAST(CAST(props->>'$.k' AS INTEGER) % 10 AS BIGINT), -1) AS k_bucket,
         |  count(*) AS n, round(sum(value), 2) AS total_value
         |FROM events
         |GROUP BY 1
-        |ORDER BY k_bucket""".stripMargin
+        |ORDER BY k_bucket""".stripMargin)
   )
 }

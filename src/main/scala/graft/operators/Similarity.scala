@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.{r6, r6s, t}
 
 /** Similarity search over the `embeddings` table (`Array[Float]` vectors,
@@ -1117,26 +1118,6 @@ object Similarity {
       .orderBy("dim")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim16_pca_top" -> pcaTop,
-    "sim15_corpus_diversity" -> corpusDiversity,
-    "sim14_hard_negatives" -> hardNegatives,
-    "sim13_embedding_health" -> embeddingHealth,
-    "sim12_silhouette" -> silhouette,
-    "sim11_mmr_topk" -> mmrTopK,
-    "sim10_mips_topk" -> mipsTopK,
-    "sim8_kmeans" -> kmeansRefine,
-    "sim7_pq_adc" -> pqAdc,
-    "sim1_cosine_topk" -> cosineTopK,
-    "sim2_ann_bucketed" -> annBucketed,
-    "sim3_embedding_neardup" -> embeddingNearDup,
-    "sim4_batch_ann" -> batchAnn,
-    "sim5_ivf_ann" -> ivfAnn,
-    "sim9_ann_recall" -> annRecallAudit,
-    "sim17_ndcg" -> ndcgAudit,
-    "sim6_semantic_clusters" -> semanticClusters
-  )
-
   private val sqlCos =
     "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))"
 
@@ -1196,8 +1177,8 @@ object Similarity {
        | v$k AS MATERIALIZED (
        |  SELECT i, w / (SELECT nm FROM n$k) AS val FROM w$k),""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "sim16_pca_top" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("sim16_pca_top", pcaTop,
       (s"""WITH e AS MATERIALIZED (
          |  SELECT embedding::DOUBLE[] AS v FROM embeddings),
          | nn AS MATERIALIZED (SELECT count(*)::DOUBLE AS n FROM e),
@@ -1242,8 +1223,8 @@ object Similarity {
           |    / nullif((SELECT trace FROM tr), 0), 6) + 0
           |    AS explained_ratio
           |FROM mu JOIN diag ON mu.i = diag.i JOIN v8 ON mu.i = v8.i
-          |ORDER BY dim""".stripMargin),
-    "sim15_corpus_diversity" ->
+          |ORDER BY dim""".stripMargin)),
+    QueryDef("sim15_corpus_diversity", corpusDiversity,
       """WITH e AS (
         |  SELECT label, list_transform(embedding::DOUBLE[],
         |    x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
@@ -1263,8 +1244,8 @@ object Similarity {
         |    AS mean_pairwise_cosine,
         |  round(sqrt(ss) / n, 6) AS centroid_norm
         |FROM n JOIN ss USING (label)
-        |ORDER BY label""".stripMargin,
-    "sim14_hard_negatives" ->
+        |ORDER BY label""".stripMargin),
+    QueryDef("sim14_hard_negatives", hardNegatives,
       s"""WITH $sqlBitsCte,
          | n AS (SELECT vec_id, label, embedding::DOUBLE[] AS v,
          |    ${sqlCell("0")} AS bucket FROM embeddings),
@@ -1284,8 +1265,8 @@ object Similarity {
          |  FROM scored WHERE cos < 0.4)
          |SELECT qid, CAST(r AS INTEGER) AS rk, vec_id, label, cos
          |FROM rk WHERE r <= 5
-         |ORDER BY qid, r""".stripMargin,
-    "sim13_embedding_health" ->
+         |ORDER BY qid, r""".stripMargin),
+    QueryDef("sim13_embedding_health", embeddingHealth,
       """WITH n AS (
         |  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         | norms AS (
@@ -1301,8 +1282,8 @@ object Similarity {
         |  FROM dims GROUP BY label)
         |SELECT norms.label, n_vecs, mean_norm, min_dim_std, max_dim_std
         |FROM norms JOIN ds ON norms.label = ds.label
-        |ORDER BY norms.label""".stripMargin,
-    "sim12_silhouette" ->
+        |ORDER BY norms.label""".stripMargin),
+    QueryDef("sim12_silhouette", silhouette,
       """WITH e6 AS (
         |  SELECT vec_id, label,
         |    list_transform(embedding::DOUBLE[],
@@ -1339,9 +1320,9 @@ object Similarity {
         |SELECT label, count(*) AS n,
         |  round(avg(sil), 6) + 0 AS mean_silhouette
         |FROM s GROUP BY label
-        |ORDER BY label""".stripMargin,
-    "sim11_mmr_topk" -> mmrOracleSql,
-    "sim10_mips_topk" ->
+        |ORDER BY label""".stripMargin),
+    QueryDef("sim11_mmr_topk", mmrTopK, mmrOracleSql),
+    QueryDef("sim10_mips_topk", mipsTopK,
       """WITH n AS (
         |  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         | s AS (
@@ -1354,8 +1335,8 @@ object Similarity {
         |  FROM s)
         |SELECT query_id, vec_id, label, ip, rk
         |FROM r WHERE rk <= 10
-        |ORDER BY query_id, rk""".stripMargin,
-    "sim8_kmeans" ->
+        |ORDER BY query_id, rk""".stripMargin),
+    QueryDef("sim8_kmeans", kmeansRefine,
       """WITH kprm AS (
         |  SELECT greatest(4, least(64, (count(*) + 63) // 64)) AS k
         |  FROM embeddings),
@@ -1400,8 +1381,8 @@ object Similarity {
         |    FROM d1) WHERE rk = 1)
         |SELECT a0.vec_id, a0.cid_seed, a1.cid_refined
         |FROM a0 JOIN a1 ON a0.vec_id = a1.vec_id
-        |ORDER BY a0.vec_id""".stripMargin,
-    "sim7_pq_adc" ->
+        |ORDER BY a0.vec_id""".stripMargin),
+    QueryDef("sim7_pq_adc", pqAdc,
       s"""WITH n AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
          | sr AS (SELECT vec_id, v,
          |    row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) AS rn
@@ -1434,14 +1415,14 @@ object Similarity {
          |SELECT a.vec_id, n.label, a.approx_l2_e6
          |FROM approx a JOIN n ON a.vec_id = n.vec_id
          |ORDER BY a.approx_l2_e6, a.vec_id
-         |LIMIT 5""".stripMargin,
-    "sim1_cosine_topk" ->
+         |LIMIT 5""".stripMargin),
+    QueryDef("sim1_cosine_topk", cosineTopK,
       s"""WITH n AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)
          |SELECT a.vec_id, a.label, round($sqlCos, 6) AS cos
          |FROM n a JOIN n b ON b.vec_id = 0 AND a.vec_id <> 0
          |ORDER BY cos DESC, a.vec_id
-         |LIMIT 10""".stripMargin,
-    "sim2_ann_bucketed" ->
+         |LIMIT 10""".stripMargin),
+    QueryDef("sim2_ann_bucketed", annBucketed,
       s"""WITH $sqlBitsCte,
          | n AS (SELECT vec_id, label, embedding::DOUBLE[] AS v,
          |    ${sqlCell("0")} AS bucket FROM embeddings),
@@ -1456,11 +1437,11 @@ object Similarity {
          |    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(p.qv, p.qv))), 6) AS cos
          |FROM n a JOIN probes p ON a.bucket = p.pb AND a.vec_id <> 0
          |ORDER BY cos DESC, a.vec_id
-         |LIMIT 5""".stripMargin,
+         |LIMIT 5""".stripMargin),
     // The integer micro-weights are interpolated from the SAME Scala val
     // the plan uses (DcgWeightsMicro) — one source of truth, no log2 in
     // either engine's scoring path.
-    "sim17_ndcg" ->
+    QueryDef("sim17_ndcg", ndcgAudit,
       s"""WITH $sqlBitsCte,
          | n AS (SELECT vec_id, embedding::DOUBLE[] AS v,
          |    ${sqlCell("0")} AS bucket FROM embeddings),
@@ -1505,8 +1486,8 @@ object Similarity {
          |  round(CAST(i.idcg_u AS DOUBLE) / 1e12, 6) + 0 AS idcg,
          |  round(CAST(d.dcg_u AS DOUBLE) / nullif(i.idcg_u, 0), 6) + 0 AS ndcg
          |FROM idcg i LEFT JOIN dcg d USING (qid)
-         |ORDER BY qid""".stripMargin,
-    "sim9_ann_recall" ->
+         |ORDER BY qid""".stripMargin),
+    QueryDef("sim9_ann_recall", annRecallAudit,
       s"""WITH $sqlBitsCte,
          | n AS (SELECT vec_id, embedding::DOUBLE[] AS v,
          |    ${sqlCell("0")} AS bucket FROM embeddings),
@@ -1542,8 +1523,8 @@ object Similarity {
          |FROM exact e LEFT JOIN approx a
          |  ON e.qid = a.qid AND e.vec_id = a.vec_id
          |GROUP BY e.qid
-         |ORDER BY e.qid""".stripMargin,
-    "sim4_batch_ann" ->
+         |ORDER BY e.qid""".stripMargin),
+    QueryDef("sim4_batch_ann", batchAnn,
       s"""WITH $sqlBitsCte,
          | n AS (SELECT vec_id, label, embedding::DOUBLE[] AS v,
          |    ${sqlCell("0")} AS bucket FROM embeddings),
@@ -1562,8 +1543,8 @@ object Similarity {
          |   row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS r
          |  FROM scored)
          |SELECT qid, vec_id, label, cos FROM rk WHERE r <= 3
-         |ORDER BY qid, cos DESC, vec_id""".stripMargin,
-    "sim5_ivf_ann" ->
+         |ORDER BY qid, cos DESC, vec_id""".stripMargin),
+    QueryDef("sim5_ivf_ann", ivfAnn,
       s"""WITH kprm AS (
          |  SELECT greatest(4, least(64, (count(*) + 63) // 64)) AS k
          |  FROM embeddings),
@@ -1596,13 +1577,13 @@ object Similarity {
          |JOIN n q ON q.vec_id = 0
          |WHERE a.vec_id <> 0
          |ORDER BY cos DESC, a.vec_id
-         |LIMIT 5""".stripMargin,
-    "sim3_embedding_neardup" ->
+         |LIMIT 5""".stripMargin),
+    QueryDef("sim3_embedding_neardup", embeddingNearDup,
       (s"WITH $sim3Ctes\n" +
-        s"$sim3PairSelect\nORDER BY vec_a, vec_b"),
+        s"$sim3PairSelect\nORDER BY vec_a, vec_b")),
     // sim6: the sim3 pair CTEs feed the same recursive transitive closure
     // dd5's oracle uses (the Spark side shares the one componentsOf loop).
-    "sim6_semantic_clusters" ->
+    QueryDef("sim6_semantic_clusters", semanticClusters,
       (s"WITH RECURSIVE $sim3Ctes,\n" +
         s" pairs AS ($sim3PairSelect),\n" +
         """ edges AS (
@@ -1616,7 +1597,7 @@ object Similarity {
           |  CAST(least(coalesce(min(r.dst), n.vec_id), n.vec_id) AS BIGINT) AS canonical_vec_id
           |FROM n LEFT JOIN reach r ON n.vec_id = r.src
           |GROUP BY n.vec_id
-          |ORDER BY vec_id""".stripMargin)
+          |ORDER BY vec_id""".stripMargin))
   )
 
   /** sim3's bits→cells→cap→candidate pipeline as a reusable CTE chain —

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.{r2, r2s, r6, r6s, t}
 
 /** Experiment / monitoring statistics — the A/B-readout and
@@ -670,28 +671,12 @@ object Stats {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ab9_msprt" -> abMsprt,
-    "ab8_fdr" -> abFdr,
-    "drift4_ks" -> ksDrift,
-    "ab7_power" -> abPower,
-    "ab6_cuped" -> abCuped,
-    "ab5_srm_check" -> abSrm,
-    "ab1_welch_readout" -> abTest,
-    "ab2_welch_effect" -> abEffect,
-    "ab3_chisq_mix" -> abChisq,
-    "ab4_lift_ci" -> abLiftCi,
-    "drift1_psi" -> psiDrift,
-    "drift2_psi_categorical" -> psiCategorical,
-    "drift3_psi_sketch" -> psiDriftSketch
-  )
-
-  val oracle: Map[String, String] = Map(
+  val registry: Seq[QueryDef] = Seq(
     // drift3's PARTIAL oracle (r18): the exact reference-window totals
     // hash-gate the carve; ref_depth_ok is Spark's KLL rank-error bound
     // check, TRUE by contract (see psiDriftSketch's scaladoc) — DuckDB
     // emits the literal, so an out-of-tolerance sketch hash-FAILS.
-    "drift3_psi_sketch" ->
+    QueryDef("drift3_psi_sketch", psiDriftSketch,
       s"""WITH e AS (
         |  SELECT epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms, value AS v
         |  FROM events WHERE value IS NOT NULL),
@@ -708,8 +693,8 @@ object Stats {
         |SELECT bucket, n_ref_total, n_cur_total, TRUE AS ref_depth_ok
         |FROM (SELECT unnest(generate_series(1, 10)) AS bucket) b
         |CROSS JOIN tot
-        |ORDER BY bucket""".stripMargin,
-    "ab9_msprt" ->
+        |ORDER BY bucket""".stripMargin),
+    QueryDef("ab9_msprt", abMsprt,
       """WITH e AS (
         |  SELECT event_type, value,
         |    substr(md5(user_id::VARCHAR), 1, 1) < '8' AS a
@@ -738,8 +723,8 @@ object Stats {
         |  CASE WHEN lnl IS NULL THEN NULL
         |    ELSE round(least(1.0, exp(-lnl)), 6) <= 0.05 END AS reject_at_05
         |FROM m
-        |ORDER BY event_type""".stripMargin,
-    "ab8_fdr" ->
+        |ORDER BY event_type""".stripMargin),
+    QueryDef("ab8_fdr", abFdr,
       """WITH e AS (
         |  SELECT event_type, value,
         |    substr(md5(user_id::VARCHAR), 1, 1) < '8' AS a
@@ -785,8 +770,8 @@ object Stats {
         |SELECT event_type, t_stat, p_value, p_bonferroni, p_bh,
         |  p_bh <= 0.05 AS significant_bh
         |FROM adj
-        |ORDER BY event_type""".stripMargin,
-    "drift4_ks" ->
+        |ORDER BY event_type""".stripMargin),
+    QueryDef("drift4_ks", ksDrift,
       s"""WITH ev AS (
          |  SELECT epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms, value
          |  FROM events WHERE value IS NOT NULL),
@@ -811,8 +796,8 @@ object Stats {
          |SELECT round(max(abs(fr - fc)), 6) AS ks_stat,
          |  CAST(min(n_ref) AS BIGINT) AS n_ref,
          |  CAST(min(n_cur) AS BIGINT) AS n_cur
-         |FROM c""".stripMargin,
-    "ab7_power" ->
+         |FROM c""".stripMargin),
+    QueryDef("ab7_power", abPower,
       """SELECT event_type,
         |  count(value) AS n_observed,
         |  round(avg(value), 6) AS mean,
@@ -830,10 +815,10 @@ object Stats {
         |  END AS n_per_arm
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin),
     // ab6: the moment arithmetic runs on unrounded per-user aggregates
     // mirroring Spark op-for-op (squares as cov*cov, never pow).
-    "ab6_cuped" ->
+    QueryDef("ab6_cuped", abCuped,
       """WITH b AS (
         |  SELECT (epoch_ms(min(CAST(ts AS TIMESTAMP)))
         |        + epoch_ms(max(CAST(ts AS TIMESTAMP)))) // 2 AS mid
@@ -859,8 +844,8 @@ object Stats {
         |    - (covar_samp(x, y) / var_samp(x))
         |      * (avg(CASE WHEN a THEN x END)
         |       - avg(CASE WHEN NOT a THEN x END)), 6) + 0 AS adj_diff
-        |FROM u""".stripMargin,
-    "ab5_srm_check" ->
+        |FROM u""".stripMargin),
+    QueryDef("ab5_srm_check", abSrm,
       """WITH u AS (
         |  SELECT DISTINCT event_type, user_id,
         |    substr(md5(user_id::VARCHAR), 1, 1) < '8' AS a
@@ -884,8 +869,8 @@ object Stats {
         |      * (n_units_b - (n_units_a + n_units_b) / 2.0)
         |      / ((n_units_a + n_units_b) / 2.0), 6) > 3.841 AS srm_alarm
         |FROM c
-        |ORDER BY event_type""".stripMargin,
-    "ab1_welch_readout" ->
+        |ORDER BY event_type""".stripMargin),
+    QueryDef("ab1_welch_readout", abTest,
       """WITH e AS (
         |  SELECT event_type, value,
         |    substr(md5(user_id::VARCHAR), 1, 1) < '8' AS a
@@ -903,11 +888,11 @@ object Stats {
         |           / count(CASE WHEN NOT a THEN value END)), 6) + 0 AS t_stat
         |FROM e
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin),
     // ab2: the t/df/d arithmetic runs on the UNROUNDED per-arm aggregates
     // in a CTE, mirroring Spark's inline expressions op-for-op (squares
     // as x * x, never pow) so both IEEE trees are identical.
-    "ab2_welch_effect" ->
+    QueryDef("ab2_welch_effect", abEffect,
       """WITH e AS (
         |  SELECT event_type, value,
         |    substr(md5(user_id::VARCHAR), 1, 1) < '8' AS a
@@ -930,11 +915,11 @@ object Stats {
         |    sqrt(((n_a - 1) * s2_a + (n_b - 1) * s2_b) / (n_a + n_b - 2)),
         |    6) + 0 AS cohen_d
         |FROM agg
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin),
     // ab4: the CI arithmetic runs on the UNROUNDED per-arm aggregates in
     // a CTE (ab2's convention); the significance bit derives from the
     // ROUNDED bounds so the verdict cannot straddle an engine boundary.
-    "ab4_lift_ci" ->
+    QueryDef("ab4_lift_ci", abLiftCi,
       """WITH e AS (
         |  SELECT event_type, value,
         |    substr(md5(user_id::VARCHAR), 1, 1) < '8' AS a
@@ -960,8 +945,8 @@ object Stats {
         |SELECT event_type, n_a, n_b, lift, rel_lift, ci_lo, ci_hi,
         |  (ci_lo > 0.0 OR ci_hi < 0.0) AS significant
         |FROM ci
-        |ORDER BY event_type""".stripMargin,
-    "ab3_chisq_mix" ->
+        |ORDER BY event_type""".stripMargin),
+    QueryDef("ab3_chisq_mix", abChisq,
       """WITH c AS (
         |  SELECT event_type,
         |    count(CASE WHEN substr(md5(user_id::VARCHAR), 1, 1) < '8'
@@ -981,8 +966,8 @@ object Stats {
         |      * (n_b - (n_a + n_b) * CAST(tb AS DOUBLE) / (ta + tb))
         |      / ((n_a + n_b) * CAST(tb AS DOUBLE) / (ta + tb)), 6) AS chisq_term
         |FROM c CROSS JOIN tot
-        |ORDER BY event_type""".stripMargin,
-    "drift2_psi_categorical" ->
+        |ORDER BY event_type""".stripMargin),
+    QueryDef("drift2_psi_categorical", psiCategorical,
       s"""WITH e AS (
         |  SELECT epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms, event_type
         |  FROM events WHERE event_type IS NOT NULL),
@@ -1005,8 +990,8 @@ object Stats {
         |    * ln(((n_ref + 0.5) / (tr + 0.5 * k))
         |       / ((n_cur + 0.5) / (tc + 0.5 * k))), 6) AS psi_term
         |FROM counts CROSS JOIN tot
-        |ORDER BY event_type""".stripMargin,
-    "drift1_psi" ->
+        |ORDER BY event_type""".stripMargin),
+    QueryDef("drift1_psi", psiDrift,
       s"""WITH e AS (
         |  SELECT epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms, value AS v
         |  FROM events WHERE value IS NOT NULL),
@@ -1036,6 +1021,6 @@ object Stats {
         |    * ln(((n_ref + 0.5) / (tr + 5.0)) / ((n_cur + 0.5) / (tc + 5.0))),
         |    6) AS psi_term
         |FROM counts CROSS JOIN tot
-        |ORDER BY bucket""".stripMargin
+        |ORDER BY bucket""".stripMargin)
   )
 }

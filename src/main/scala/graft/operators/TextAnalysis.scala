@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.{r6, r6s, t, tWide}
 import graft.functions.TextFunctions._
 
@@ -1404,40 +1405,6 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t30_boilerplate" -> boilerplate,
-    "t29_readability" -> readability,
-    "t28_oov_rate" -> oovRate,
-    "t27_gopher_rules" -> gopherRules,
-    "t26_ngram_novelty" -> ngramNovelty,
-    "t25_langid_confusion" -> langidConfusion,
-    "t24_heaps_fit" -> heapsFit,
-    "t16_bm25_rank" -> bm25Rank,
-    "t17_inverted_index" -> invertedIndex,
-    "t18_bm25_from_index" -> bm25FromIndex,
-    "t19_pmi_collocations" -> pmiCollocations,
-    "t1_text_profile" -> profile,
-    "t2_quality_bands" -> qualityBands,
-    "t3_fingerprints" -> fingerprints,
-    "t4_quality_filter" -> qualityFilter,
-    "t5_repetition" -> repetition,
-    "t6_vocab_topk" -> vocabulary,
-    "t14_zipf" -> zipf,
-    "t20_lexical_diversity" -> lexicalDiversity,
-    "t15_bpe_step" -> bpeStep,
-    "t21_bpe_train" -> bpeTrain,
-    "t22_bpe_encode" -> bpeEncode,
-    "t31_fertility" -> fertility,
-    "t7_redact" -> redact,
-    "t8_lm_surprise" -> lmSurprise,
-    "t23_perplexity_filter" -> perplexityFilter,
-    "t9_chunks" -> chunks,
-    "t10_packing" -> packing,
-    "t11_bpe_merge_pairs" -> bpeMergePairs,
-    "t12_tfidf_keywords" -> tfidfKeywords,
-    "t13_top_bigram" -> topBigram
-  )
-
   // Shared SQL fragments for the oracle (DuckDB dialect), mirroring
   // TextFunctions exactly.
   private[graft] val sqlTokens =
@@ -1660,8 +1627,8 @@ object TextAnalysis {
        |ORDER BY bm25 DESC, doc_id
        |LIMIT 10""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "t30_boilerplate" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("t30_boilerplate", boilerplate,
       s"""WITH tk AS (
          |  SELECT doc_id, $sqlTokens AS t FROM documents),
          | sh AS (
@@ -1683,8 +1650,8 @@ object TextAnalysis {
          |  coalesce(p.n_boiler, 0) AS n_boiler,
          |  round(p.n_boiler::DOUBLE / p.n_shingles, 6) AS boilerplate_rate
          |FROM documents d LEFT JOIN per p USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-    "t28_oov_rate" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    QueryDef("t28_oov_rate", oovRate,
       s"""WITH tok AS (
          |  SELECT doc_id, unnest($sqlTokens) AS token FROM documents),
          | vocab AS (
@@ -1701,8 +1668,8 @@ object TextAnalysis {
          |  coalesce(p.n_oov, 0) AS n_oov,
          |  round(p.n_oov::DOUBLE / p.n_tokens, 6) AS oov_rate
          |FROM documents d LEFT JOIN per p USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-    "t29_readability" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    QueryDef("t29_readability", readability,
       s"""WITH m AS (
          |  SELECT doc_id,
          |    ${sqlTokenCount("text")} AS n_words,
@@ -1722,8 +1689,8 @@ object TextAnalysis {
          |    + 11.8 * (n_syllables::DOUBLE / nullif(n_words, 0))
          |    - 15.59, 6) + 0 AS fk_grade
          |FROM m
-         |ORDER BY doc_id""".stripMargin,
-    "t27_gopher_rules" ->
+         |ORDER BY doc_id""".stripMargin),
+    QueryDef("t27_gopher_rules", gopherRules,
       s"""WITH w AS (
          |  SELECT doc_id,
          |    regexp_split_to_array(trim(text), '\\s+') AS words,
@@ -1755,8 +1722,8 @@ object TextAnalysis {
          |    AND coalesce(alpha_word_frac >= 0.8, false)
          |    AND stopword_hits >= 2 AS passes
          |FROM m
-         |ORDER BY doc_id""".stripMargin,
-    "t26_ngram_novelty" ->
+         |ORDER BY doc_id""".stripMargin),
+    QueryDef("t26_ngram_novelty", ngramNovelty,
       s"""WITH tk AS (SELECT doc_id, $sqlTokens AS t FROM documents),
          | ds AS (
          |  SELECT DISTINCT doc_id, s FROM (
@@ -1775,8 +1742,8 @@ object TextAnalysis {
          |  coalesce(p.n_novel, 0) AS n_novel,
          |  round(p.n_novel / CAST(p.n_bigrams AS DOUBLE), 6) AS novelty
          |FROM documents d LEFT JOIN per p USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-    "t25_langid_confusion" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    QueryDef("t25_langid_confusion", langidConfusion,
       s"""WITH cells AS (
          |  SELECT lang AS declared, ${sqlLangId("text")} AS detected,
          |    count(*) AS n
@@ -1785,8 +1752,8 @@ object TextAnalysis {
          |  round(n / CAST(sum(n) OVER (PARTITION BY declared) AS DOUBLE),
          |    6) AS share_of_declared
          |FROM cells
-         |ORDER BY declared, detected""".stripMargin,
-    "t24_heaps_fit" ->
+         |ORDER BY declared, detected""".stripMargin),
+    QueryDef("t24_heaps_fit", heapsFit,
       s"""WITH m AS (SELECT max(doc_id) + 1 AS m FROM documents),
          | tk AS (SELECT doc_id, $sqlTokens AS t FROM documents),
          | tok AS (
@@ -1813,8 +1780,8 @@ object TextAnalysis {
          |SELECT bucket, n_tokens, vocab,
          |  round(beta, 6) AS beta, round(exp(alpha), 6) AS k_const
          |FROM curve, fit
-         |ORDER BY bucket""".stripMargin,
-    "t1_text_profile" ->
+         |ORDER BY bucket""".stripMargin),
+    QueryDef("t1_text_profile", profile,
       s"""SELECT doc_id,
          |  ${sqlTokenCount("text")} AS n_tokens,
          |  ${sqlBpe("text")} AS n_bpe_tokens,
@@ -1825,8 +1792,8 @@ object TextAnalysis {
          |  ${sqlLangId("text")} AS lang_detected,
          |  ${sqlFp("text")} AS fp
          |FROM documents
-         |ORDER BY doc_id""".stripMargin,
-    "t3_fingerprints" ->
+         |ORDER BY doc_id""".stripMargin),
+    QueryDef("t3_fingerprints", fingerprints,
       s"""WITH tk AS (
          |  SELECT doc_id, ${sqlFp("text")} AS fp_doc,
          |    list_filter(regexp_split_to_array(lower(text), '[^a-z]+'), x -> x <> '') AS t
@@ -1841,14 +1808,14 @@ object TextAnalysis {
          |  FROM sh GROUP BY doc_id)
          |SELECT tk.doc_id, tk.fp_doc, ms.fp_shingle
          |FROM tk LEFT JOIN ms ON tk.doc_id = ms.doc_id
-         |ORDER BY tk.doc_id""".stripMargin,
-    "t4_quality_filter" ->
+         |ORDER BY tk.doc_id""".stripMargin),
+    QueryDef("t4_quality_filter", qualityFilter,
       s"""SELECT doc_id, ${sqlQuality("text")} AS quality,
          |  ${sqlLangId("text")} AS lang_detected
          |FROM documents
          |WHERE ${sqlQuality("text")} >= 0.7 AND ${sqlLangId("text")} = 'en'
-         |ORDER BY doc_id""".stripMargin,
-    "t5_repetition" ->
+         |ORDER BY doc_id""".stripMargin),
+    QueryDef("t5_repetition", repetition,
       """WITH tk AS (
         |  SELECT doc_id,
         |    list_filter(regexp_split_to_array(lower(text), '[^a-z]+'), x -> x <> '') AS t
@@ -1858,8 +1825,8 @@ object TextAnalysis {
         |  round(CASE WHEN len(t) = 0 THEN 0.0
         |    ELSE 1.0 - CAST(len(list_distinct(t)) AS DOUBLE) / len(t) END, 6) AS repetition
         |FROM tk
-        |ORDER BY doc_id""".stripMargin,
-    "t14_zipf" ->
+        |ORDER BY doc_id""".stripMargin),
+    QueryDef("t14_zipf", zipf,
       """WITH tok AS (
         |  SELECT unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
         |    x -> x <> '')) AS token
@@ -1873,8 +1840,8 @@ object TextAnalysis {
         |  round(corr(ln(freq), ln(rank)), 6) + 0 AS zipf_corr,
         |  count(*) AS n_types,
         |  CAST(sum(freq) AS BIGINT) AS n_tokens
-        |FROM ranked""".stripMargin,
-    "t20_lexical_diversity" ->
+        |FROM ranked""".stripMargin),
+    QueryDef("t20_lexical_diversity", lexicalDiversity,
       """WITH tok AS (
         |  SELECT source,
         |    unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
@@ -1891,8 +1858,8 @@ object TextAnalysis {
         |    AS hapax_share
         |FROM pt
         |GROUP BY source
-        |ORDER BY source""".stripMargin,
-    "t6_vocab_topk" ->
+        |ORDER BY source""".stripMargin),
+    QueryDef("t6_vocab_topk", vocabulary,
       """WITH tok AS (
         |  SELECT doc_id,
         |    unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
@@ -1902,8 +1869,8 @@ object TextAnalysis {
         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
         |FROM tok GROUP BY token
         |ORDER BY n_occurrences DESC, token
-        |LIMIT 50""".stripMargin,
-    "t7_redact" ->
+        |LIMIT 50""".stripMargin),
+    QueryDef("t7_redact", redact,
       s"""WITH m AS (
          |  SELECT doc_id,
          |    CASE WHEN doc_id % 5 = 0 THEN text || ' contact john.doe@example.com'
@@ -1920,13 +1887,13 @@ object TextAnalysis {
          |    '$EmailRe', '<EMAIL>', 'g'),
          |    '$PhoneRe', '<PHONE>', 'g')) AS redacted_fp
          |FROM m
-         |ORDER BY doc_id""".stripMargin,
-    "t8_lm_surprise" ->
+         |ORDER BY doc_id""".stripMargin),
+    QueryDef("t8_lm_surprise", lmSurprise,
       s"""WITH $sqlSurpriseCtes
         |SELECT tk.doc_id, coalesce(agg.n_bigrams, 0) AS n_bigrams, agg.avg_surprise
         |FROM tk LEFT JOIN agg USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "t23_perplexity_filter" ->
+        |ORDER BY doc_id""".stripMargin),
+    QueryDef("t23_perplexity_filter", perplexityFilter,
       s"""WITH $sqlSurpriseCtes,
         | s AS (
         |  SELECT doc_id, avg_surprise FROM agg WHERE n_bigrams > 0),
@@ -1940,8 +1907,8 @@ object TextAnalysis {
         |       ELSE 'mid' END AS band,
         |  avg_surprise >= lo_cut AND avg_surprise <= hi_cut AS kept
         |FROM s, cuts
-        |ORDER BY doc_id""".stripMargin,
-    "t9_chunks" ->
+        |ORDER BY doc_id""".stripMargin),
+    QueryDef("t9_chunks", chunks,
       s"""WITH tk AS (
          |  SELECT doc_id, ${sqlTokenCount("text")} AS n FROM documents),
          | ch AS (
@@ -1952,15 +1919,16 @@ object TextAnalysis {
          |  CAST(start_token AS BIGINT) AS start_token,
          |  CAST(least($ChunkTokens, n - start_token) AS BIGINT) AS n_tokens
          |FROM ch
-         |ORDER BY doc_id, chunk_id""".stripMargin,
-    "t10_packing" ->
+         |ORDER BY doc_id, chunk_id""".stripMargin),
+    QueryDef("t10_packing", packing,
       (s"""WITH tk AS (
          |  SELECT doc_id, ${sqlTokenCount("text")} AS n, doc_id % $PackShards AS shard
          |  FROM documents),
-         |""".stripMargin + sqlPackTail("tk")),
-    "t21_bpe_train" -> sqlBpeTrain(BpeTrainSteps),
-    "t22_bpe_encode" -> sqlBpeEncode(BpeTrainSteps),
-    "t31_fertility" -> (sqlBpeDocUnits(BpeTrainSteps) +
+         |""".stripMargin + sqlPackTail("tk"))),
+    QueryDef("t21_bpe_train", bpeTrain, sqlBpeTrain(BpeTrainSteps)),
+    QueryDef("t22_bpe_encode", bpeEncode, sqlBpeEncode(BpeTrainSteps)),
+    QueryDef("t31_fertility", fertility,
+      (sqlBpeDocUnits(BpeTrainSteps) +
       """,
         | pd AS (
         |  SELECT d.lang,
@@ -1977,18 +1945,18 @@ object TextAnalysis {
         |  round(CAST(sum(n_units) AS DOUBLE)
         |    / nullif(CAST(sum(n_chars) AS BIGINT), 0), 6) + 0 AS compression
         |FROM pd GROUP BY 1
-        |ORDER BY lang""".stripMargin),
-    "t11_bpe_merge_pairs" ->
+        |ORDER BY lang""".stripMargin)),
+    QueryDef("t11_bpe_merge_pairs", bpeMergePairs,
       s"""WITH $sqlBpePairCtes
          |SELECT pair, count(*) AS n_occurrences
          |FROM pairs GROUP BY pair
          |ORDER BY n_occurrences DESC, pair
-         |LIMIT 50""".stripMargin,
+         |LIMIT 50""".stripMargin),
     // t15: the SAME election CTEs as t11 (shared fragment — the winning
     // pair cannot drift between the two oracles), then ONE string replace
     // per token (greedy left-to-right in both engines) with the '0'
     // sentinel decoded back in the pair labels.
-    "t15_bpe_step" ->
+    QueryDef("t15_bpe_step", bpeStep,
       s"""WITH $sqlBpePairCtes,
          | top AS (
          |  SELECT pair AS mp FROM (
@@ -2009,8 +1977,8 @@ object TextAnalysis {
          |SELECT pair, count(*) AS n_occurrences
          |FROM p2 GROUP BY pair
          |ORDER BY n_occurrences DESC, pair
-         |LIMIT 50""".stripMargin,
-    "t17_inverted_index" ->
+         |LIMIT 50""".stripMargin),
+    QueryDef("t17_inverted_index", invertedIndex,
       s"""SELECT token, shard, count(*) AS n_docs,
          |  array_to_string(list(doc_id ORDER BY doc_id), ',') AS postings
          |FROM (
@@ -2018,9 +1986,9 @@ object TextAnalysis {
          |    unnest(list_distinct($sqlTokens)) AS token
          |  FROM documents)
          |GROUP BY token, shard
-         |ORDER BY token, shard""".stripMargin,
-    "t16_bm25_rank" -> sqlBm25TopTen,
-    "t19_pmi_collocations" ->
+         |ORDER BY token, shard""".stripMargin),
+    QueryDef("t16_bm25_rank", bm25Rank, sqlBm25TopTen),
+    QueryDef("t19_pmi_collocations", pmiCollocations,
       s"""WITH tk AS (
          |  SELECT doc_id, $sqlTokens AS t FROM documents),
          | uni AS (
@@ -2042,13 +2010,13 @@ object TextAnalysis {
          |JOIN uni ub ON split_part(bg, ' ', 2) = ub.token
          |WHERE n_ab >= 5
          |ORDER BY pmi DESC, bigram
-         |LIMIT 50""".stripMargin,
+         |LIMIT 50""".stripMargin),
     // t18 serves the SAME ranking from the materialized index — its
     // output contract is t16's, so the oracle is the shared direct-scan
     // SQL (the serve path's index plumbing is pinned Spark-side by the
     // t16 ≡ t18 equivalence spec).
-    "t18_bm25_from_index" -> sqlBm25TopTen,
-    "t12_tfidf_keywords" ->
+    QueryDef("t18_bm25_from_index", bm25FromIndex, sqlBm25TopTen),
+    QueryDef("t12_tfidf_keywords", tfidfKeywords,
       s"""WITH tok AS (
          |  SELECT doc_id, unnest($sqlTokens) AS token FROM documents),
          | pairs AS (
@@ -2066,8 +2034,8 @@ object TextAnalysis {
          |      ORDER BY tfidf DESC, token) AS rk
          |  FROM scored)
          |WHERE rk <= 3
-         |ORDER BY doc_id, tfidf DESC, token""".stripMargin,
-    "t13_top_bigram" ->
+         |ORDER BY doc_id, tfidf DESC, token""".stripMargin),
+    QueryDef("t13_top_bigram", topBigram,
       s"""WITH tk AS (
          |  SELECT doc_id, $sqlTokens AS t FROM documents),
          | bi AS (
@@ -2089,14 +2057,14 @@ object TextAnalysis {
          |  coalesce(top.c, 0) AS n_occurrences,
          |  coalesce(round(top.c::DOUBLE / top.n_bigrams, 6), 0.0) AS bigram_share
          |FROM tk LEFT JOIN top USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "t2_quality_bands" ->
+         |ORDER BY doc_id""".stripMargin),
+    QueryDef("t2_quality_bands", qualityBands,
       s"""SELECT ${sqlLangId("text")} AS lang_detected,
          |  CAST(floor(${sqlQuality("text")} * 10) AS BIGINT) AS quality_decile,
          |  count(*) AS n_docs,
          |  CAST(sum(${sqlTokenCount("text")}) AS BIGINT) AS total_tokens
          |FROM documents
          |GROUP BY 1, 2
-         |ORDER BY lang_detected, quality_decile""".stripMargin
+         |ORDER BY lang_detected, quality_decile""".stripMargin)
   )
 }

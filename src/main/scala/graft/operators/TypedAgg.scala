@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.t
 
 /** Typed `Aggregator[IN, BUF, OUT]` surface (SURVEY.md §2.5 UDAF): a
@@ -135,26 +136,21 @@ object TypedAgg {
       .orderBy("l_returnflag")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg1_topk_typed" -> topOrdersTyped,
-    "agg2_wgmean_typed" -> weightedGMeanTyped
-  )
-
-  val oracle: Map[String, String] = Map(
-    "agg2_wgmean_typed" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("agg2_wgmean_typed", weightedGMeanTyped,
       """SELECT l_returnflag,
         |  round(exp(sum(l_quantity * ln(l_extendedprice))
         |    / sum(l_quantity)), 2) AS w_gmean_price
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "agg1_topk_typed" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    QueryDef("agg1_topk_typed", topOrdersTyped,
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_custkey
         |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders)
         |WHERE rn <= 3
-        |ORDER BY o_custkey, rn""".stripMargin
+        |ORDER BY o_custkey, rn""".stripMargin)
   )
 }

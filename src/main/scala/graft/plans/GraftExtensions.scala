@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.FloatDotProduct
 
@@ -10,11 +11,8 @@ import graft.functions.FloatDotProduct
   * the engine's custom expressions as SQL functions so `spark.sql` text
   * can use them.
   *
-  * Wire at session build time:
-  * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
-  * }}}
-  * or via config (survives spark-submit):
+  * [[graft.GraftSession.builder]] wires it at session build time; a
+  * session built elsewhere takes it via config (survives spark-submit):
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
   * No custom Rule[LogicalPlan] or SparkStrategy is registered — every
@@ -38,9 +36,14 @@ object GraftExtensions {
     (exprs: Seq[Expression]) => FloatDotProduct(exprs(0), exprs(1)))
 
   /** Register on an ALREADY-RUNNING session (extensions only apply at
-    * session construction). Used by tests and notebooks.
+    * session construction), e.g. one a notebook built without
+    * [[graft.GraftSession]]. Checks before it adds: on a session that
+    * already has the function — every GraftSession-built one does — it is
+    * a no-op rather than a replace-with-warning.
     */
-  def registerOn(spark: SparkSession): Unit =
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, floatDotProduct._1, floatDotProduct._2, floatDotProduct._3)
+  def registerOn(spark: SparkSession): Unit = {
+    val (ident, info, builder) = floatDotProduct
+    if (!Bridge.functionExists(spark, ident))
+      Bridge.registerFunction(spark, ident, info, builder)
+  }
 }

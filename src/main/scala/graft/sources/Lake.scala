@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables.{r2, t}
 
 /** Hive-style partitioned-lake layout — the storage discipline that makes
@@ -610,23 +611,12 @@ object Lake {
       col("n_events"), col("n_users"), col("total_value"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "lake8_vacuum" -> vacuum,
-    "lake7_partition_evolution" -> partitionEvolution,
-    "lake6_schema_evolution" -> schemaEvolution,
-    "lake1_partitioned_roundtrip" -> partitionedRoundtrip,
-    "lake2_zorder_keys" -> zorderKeys,
-    "lake3_incremental_read" -> incrementalRead,
-    "lake4_compaction" -> compactionReport,
-    "lake5_time_travel" -> timeTravel
-  )
-
   private def sqlZCell(v: String, mn: String, mx: String): String =
     s"CASE WHEN $mx = $mn THEN 0 ELSE " +
       s"CAST(floor((CAST($v AS DOUBLE) - $mn) / ($mx - $mn) * ${(1 << ZBits) - 1}) AS BIGINT) END"
 
-  val oracle: Map[String, String] = Map(
-    "lake2_zorder_keys" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("lake2_zorder_keys", zorderKeys,
       s"""WITH stats AS (
         |  SELECT min(user_id) AS mnu, max(user_id) AS mxu,
         |    min(value) AS mnv, max(value) AS mxv
@@ -638,16 +628,16 @@ object Lake {
         |  FROM events CROSS JOIN stats)
         |SELECT event_id, ${sqlZInterleave("ca", "cb")} AS zvalue
         |FROM cells
-        |ORDER BY event_id""".stripMargin,
-    "lake1_partitioned_roundtrip" ->
+        |ORDER BY event_id""".stripMargin),
+    QueryDef("lake1_partitioned_roundtrip", partitionedRoundtrip,
       """SELECT event_type, count(*) AS n,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
         |  round(sum(value), 2) AS total_value
         |FROM events
         |WHERE event_type = 'click'
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-    "lake8_vacuum" ->
+        |ORDER BY event_type""".stripMargin),
+    QueryDef("lake8_vacuum", vacuum,
       """WITH cut AS (SELECT min(ts::DATE) + 15 AS c FROM events),
         | n1 AS (SELECT count(*) AS v FROM events, cut WHERE ts::DATE <= c),
         | n AS (SELECT count(*) AS v FROM events),
@@ -661,14 +651,14 @@ object Lake {
         |  count(*) AS n_events,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
         |  round(sum(value), 2) AS total_value
-        |FROM events""".stripMargin,
-    "lake7_partition_evolution" ->
+        |FROM events""".stripMargin),
+    QueryDef("lake7_partition_evolution", partitionEvolution,
       """SELECT strftime(CAST(ts AS TIMESTAMP)::DATE, '%Y-%m') AS month,
         |  count(*) AS n_rows, CAST(1 AS BIGINT) AS n_files
         |FROM events
         |GROUP BY 1
-        |ORDER BY month""".stripMargin,
-    "lake6_schema_evolution" ->
+        |ORDER BY month""".stripMargin),
+    QueryDef("lake6_schema_evolution", schemaEvolution,
       """WITH cut AS (SELECT min(ts::DATE) + 15 AS c FROM events)
         |SELECT CASE WHEN ts::DATE <= c THEN 1 ELSE 2 END AS gen,
         |  count(*) AS n_rows,
@@ -676,8 +666,8 @@ object Lake {
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
         |FROM events, cut
         |GROUP BY 1
-        |ORDER BY gen""".stripMargin,
-    "lake5_time_travel" ->
+        |ORDER BY gen""".stripMargin),
+    QueryDef("lake5_time_travel", timeTravel,
       """WITH cut AS (SELECT min(ts::DATE) + 15 AS c FROM events)
         |SELECT * FROM (
         |  SELECT CAST(1 AS BIGINT) AS version, count(*) AS n_events,
@@ -688,8 +678,8 @@ object Lake {
         |  SELECT CAST(2 AS BIGINT), count(*),
         |    CAST(count(DISTINCT user_id) AS BIGINT), round(sum(value), 2)
         |  FROM events)
-        |ORDER BY version""".stripMargin,
-    "lake4_compaction" ->
+        |ORDER BY version""".stripMargin),
+    QueryDef("lake4_compaction", compactionReport,
       """WITH p AS (
         |  SELECT greatest(25, CAST(ceil(count(*) / 400.0) AS BIGINT)) AS b1
         |  FROM events)
@@ -700,8 +690,8 @@ object Lake {
         |    AS files_after
         |FROM events
         |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "lake3_incremental_read" ->
+        |ORDER BY 1""".stripMargin),
+    QueryDef("lake3_incremental_read", incrementalRead,
       """WITH wm AS (SELECT min(ts::DATE) + 14 AS w FROM events)
         |SELECT ts::DATE AS day, count(*) AS n_events,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
@@ -709,6 +699,6 @@ object Lake {
         |FROM events, wm
         |WHERE ts::DATE > w
         |GROUP BY 1
-        |ORDER BY 1""".stripMargin
+        |ORDER BY 1""".stripMargin)
   )
 }

@@ -26,6 +26,12 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Whether a live session's registry already holds `ident`. */
+  def functionExists(
+      spark: org.apache.spark.sql.SparkSession,
+      ident: org.apache.spark.sql.catalyst.FunctionIdentifier): Boolean =
+    spark.sessionState.functionRegistry.functionExists(ident)
+
   /** Register a function on a live session's registry (the
     * SparkSessionExtensions path only applies at construction time).
     */

@@ -10,14 +10,34 @@ import graft.plans.GraftExtensions
 class ExtensionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  private val dot =
+    """SELECT float_dot_product(
+      |  array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
+      |  array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d""".stripMargin
+
+  // Declared first: it must see the session before any registerOn call.
+  test("float_dot_product resolves on the test session without registerOn") {
+    assert(spark.sql(dot).collect()(0).getDouble(0) == 11.0)
+  }
+
+  test("registerOn is a no-op when the function is already registered") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
+    import org.apache.spark.sql.graftbridge.Bridge
+    // a child session, so the shared registry is never touched; a
+    // sentinel that answers 7.0 shows whether registerOn replaced it
+    val s = spark.newSession()
+    Bridge.registerFunction(s, FunctionIdentifier("float_dot_product"),
+      new ExpressionInfo("sentinel", "float_dot_product"),
+      _ => Literal(7.0))
+    GraftExtensions.registerOn(s)
+    GraftExtensions.registerOn(s)
+    assert(s.sql(dot).collect()(0).getDouble(0) == 7.0)
+  }
+
   test("float_dot_product callable from SQL after registration") {
     GraftExtensions.registerOn(spark)
-    val r = spark.sql(
-      """SELECT float_dot_product(
-        |  array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
-        |  array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d""".stripMargin)
-      .collect()(0).getDouble(0)
-    assert(r == 11.0)
+    assert(spark.sql(dot).collect()(0).getDouble(0) == 11.0)
   }
 
   test("extensions object injects without error at construction") {

@@ -38,12 +38,9 @@ class SmokeSpec extends AnyFunSuite {
 
   test("every query has oracle SQL — the rows-only set is EMPTY") {
     // an entry in `queries` without oracle SQL downgrades the driver's
-    // gate to rows-only. As of r19 the set is EMPTY: prof8/drift3
-    // graduated to PARTIAL oracles in r18 and prof7/seg1_rfm_approx in
-    // r19 (exact columns hash-gated + in-query sketch-bound booleans the
-    // DuckDB side emits as literals — see each gate's scaladoc). Any
-    // future sketch query must ship at least a partial oracle; this
-    // assertion is the tripwire.
+    // gate to rows-only. QueryDef makes the oracle a required field, so
+    // this holds by construction; the assertion is the tripwire should
+    // the two views ever be split again.
     val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(rowsOnly == Set.empty[String],
       s"undeclared rows-only queries: ${rowsOnly.toSeq.sorted.mkString(", ")}")
@@ -51,5 +48,17 @@ class SmokeSpec extends AnyFunSuite {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty,
       s"oracle SQL without queries: ${orphans.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("every registry name is distinct, and a repeated name fails by name") {
+    // a name defined twice would silently drop one definition from the
+    // keyed views; `index` must refuse it and name the culprit.
+    val names = SparkEntry.registry.map(_.name)
+    val repeated = names.diff(names.distinct)
+    assert(repeated.isEmpty, s"repeated names: ${repeated.mkString(", ")}")
+    val d = SparkEntry.registry.head
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.index(Seq(d, d.copy(oracleSql = "SELECT 1"))))
+    assert(e.getMessage.contains(d.name), e.getMessage)
   }
 }
